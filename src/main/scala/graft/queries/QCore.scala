@@ -53,11 +53,11 @@ object QCore {
 
   /** SURVEY §3 E2 — the reference's whole REST job pipeline as ONE DAG:
     * synthesize jobs -> eligibility filter (P6) -> decode (P1) -> forward
-    * dim join (J1, broadcast) -> fetch-status filter (P7) -> derived tick
+    * dim lookup (J1, map projection) -> fetch-status filter (P7) -> derived tick
     * normalization (P3/F8) -> envelope publish payload (P5/F5). The
     * reference crosses the network 5× per record for this
-    * (main.py:264-355); here it is one declarative plan with a single
-    * broadcast and zero shuffles before the final sort. */
+    * (main.py:264-355); here it is one declarative plan with no join and
+    * zero shuffles before the final sort. */
   val e2Pipeline = QuerySpec("e2_pipeline",
     (s, d) => {
       val jobs = T(s, d, "orders").select(

@@ -1,7 +1,5 @@
 package graft.schema
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** The 84-row ISIN -> currency-pair dimension.
   *
   * Regenerated from the reference's static in-process dict
@@ -10,8 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Forward lookup (isin -> pair) is a hard KeyError in the reference
   * (currency.py:93-94) => inner-join drop semantics; reverse lookup
   * (pair -> isin) returns None on miss (currency.py:96-99) => left-outer
-  * null semantics. Both are broadcast hash joins here (84 rows — always
-  * broadcast; at 100 TB fact scale the dim side stays driver-resident).
+  * null semantics. Both are map lookups over these rows ([[graft.ops.DimJoins]]),
+  * so the dim rides each plan as a literal and the facts never move.
   */
 object CurrencyDim {
   val rows: Seq[CurrencyPair] = Seq(
@@ -99,12 +97,6 @@ object CurrencyDim {
         CurrencyPair("XFC000000082", "spk", "usd", "spkusd"),
         CurrencyPair("XFC000000083", "spk", "btc", "spkbtc"),
         CurrencyPair("XFC000000084", "spk", "eth", "spketh")  )
-
-  /** Broadcast-sized dimension DataFrame. */
-  def df(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    spark.createDataset(rows).toDF()
-  }
 
   /** The same dimension as an inline ANSI VALUES relation, for DuckDB
     * oracle SQL. Kept in one place so Spark + oracle can never drift. */

@@ -56,7 +56,8 @@ import java.nio.charset.StandardCharsets.UTF_8
   *    failure, not a silent drop.
   *
   * Deployment shape: ONE sink (= one connection + one channel) per
-  * executor partition, created inside foreachPartition — the reference
+  * executor partition, created inside foreachPartition and closed when
+  * the partition is done ([[MessageSink.close]]) — the reference
   * instead dials a fresh connection PER MESSAGE (its documented
   * inefficiency, SURVEY §0.2); per-partition connections are the
   * at-scale form of the same dialogue. In the sandbox the full dialogue
@@ -94,7 +95,7 @@ final class AmqpSink(host: String, port: Int, username: String,
     }
   }
 
-  def close(): Unit = teardown()
+  override def close(): Unit = teardown()
 
   private def ensure(): Unit = {
     if (declaredQueues == null)
@@ -122,6 +123,9 @@ private[sources] object AmqpSink {
   /** Ceiling on a synchronous confirm wait (broker-unresponsive guard —
     * a lost broker must fail the partition's publish, not hang it). */
   private val ConfirmTimeoutMs = 30000
+  /** Ceiling on the close-ok wait: a silent broker must not hang the
+    * task that closes its sink copy. */
+  private val CloseTimeoutMs = 5000
 
   /** One connection + channel 1, handshaken in the constructor. */
   final class Conn(host: String, port: Int, user: String, pass: String,
@@ -390,6 +394,7 @@ private[sources] object AmqpSink {
 
     def close(): Unit = {
       try {
+        sock.setSoTimeout(CloseTimeoutMs)
         sendFrame(FrameMethod, 0, method(10, 50) { b =>
           writeShort(b, 200); shortstr(b, "bye"); writeShort(b, 0)
           writeShort(b, 0)

@@ -18,6 +18,11 @@ trait MessageSink extends Serializable {
   /** Publish one JSON payload; true on success (reference returns only a
     * bool, main.py:229-230). Must be idempotence-tolerant downstream. */
   def publish(queue: String, payload: String): Boolean
+
+  /** Release what this copy holds (a connection). Spark deserializes one
+    * copy of the sink per task, so the partition writers below close
+    * their copy when the partition is done. */
+  def close(): Unit = ()
 }
 
 /** The real AMQP `MessageSink` impl is [[AmqpSink]] (round 16): the
@@ -59,7 +64,8 @@ object QueueSink {
     * partition-local (usable directly and from streaming foreachBatch). */
   def publishBatch(df: DataFrame, sink: MessageSink, queue: String): Unit =
     df.select(col("envelope")).foreachPartition { rows: Iterator[Row] =>
-      rows.foreach(r => sink.publish(queue, r.getString(0)))
+      try rows.foreach(r => sink.publish(queue, r.getString(0)))
+      finally sink.close()
     }
 
   /** The publish path is at-least-once by contract (no publisher confirms,
@@ -82,9 +88,9 @@ object QueueSink {
       queue: String): Unit =
     transitions.select(col("job_id"), col("action"))
       .foreachPartition { rows: Iterator[Row] =>
-        rows.foreach { r =>
+        try rows.foreach { r =>
           sink.publish(s"$queue/${r.getLong(0)}",
             s"""[{"action": ${r.getInt(1)}}]""")
-        }
+        } finally sink.close()
       }
 }

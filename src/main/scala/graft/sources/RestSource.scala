@@ -131,14 +131,14 @@ object RestSource {
     }
   }
 
-  /** S3/S4 — fan out ticker fetches per pair *inside partitions* (at scale
-    * the pair list is a DataFrame; each partition holds a connection).
-    * Output: (exchange, pair, status, body) with non-200/transport errors
-    * as status rows. */
+  /** S3/S4 — fan out ticker fetches per pair *inside partitions*: the local
+    * pair list already splits into min(n, defaultParallelism) partitions,
+    * no shuffle, each with its own fetcher copy. Output: (exchange, pair,
+    * status, body) with non-200/transport errors as status rows. */
   def fetchTickers(spark: SparkSession, pairs: Seq[(String, String, String)],
       fetcher: HttpFetcher): DataFrame = {
     import spark.implicits._
-    val in = pairs.toDF("exchange", "base", "quote").repartition(col("exchange"))
+    val in = pairs.toDF("exchange", "base", "quote")
     val fetched = in.as[(String, String, String)].mapPartitions { it =>
       it.map { case (exchange, base, quote) =>
         val url = exchange match {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable
 
 /** S5 — custom DSv2 micro-batch streaming source for WSS tick frames.
   *
@@ -18,11 +18,14 @@ import scala.collection.mutable.ArrayBuffer
   * per-channel in-memory queue that the consumer drains non-blocking
   * (main.py:375-398). Spark-first equivalent: the socket thread appends
   * raw positional frames to [[TickChannels]]; this DSv2 source exposes the
-  * buffer as an unbounded table — offsets are buffer positions, each
-  * micro-batch reads the newly-arrived slice (ST2's "empty queue -> no-op"
-  * is an empty offset range). In production one [[InputPartition]] per
-  * subscribed channel keeps per-pair ordering, mirroring the reference's
-  * queue-per-channel isolation; the tests drive a single channel.
+  * buffer as an unbounded table — offsets are absolute channel positions,
+  * each micro-batch reads the newly-arrived slice (ST2's "empty queue ->
+  * no-op" is an empty offset range), and a commit drops the frames below
+  * the committed end, so a channel holds about two batches of frames
+  * however long it runs; a channel therefore has one consumer. In
+  * production one [[InputPartition]] per subscribed channel keeps per-pair
+  * ordering, mirroring the reference's queue-per-channel isolation; the
+  * tests drive a single channel.
   *
   * The live WSS SOCKET client (the reference's btfxwss subscribe/ping
   * thread, main.py:375-398) is [[WsTickClient]] (round 16): a
@@ -43,13 +46,44 @@ object TickChannels {
   /** (exchange, pair, frame, epochMicros) — the raw WSS positional frame
     * plus receive metadata, pre-projection (P2 runs downstream). */
   type Frame = (String, String, Array[Double], Long)
-  private val channels = new java.util.concurrent.ConcurrentHashMap[String, ArrayBuffer[Frame]]()
-  private def buf(name: String): ArrayBuffer[Frame] =
-    channels.computeIfAbsent(name, _ => ArrayBuffer.empty)
-  def append(name: String, f: Frame): Unit = buf(name).synchronized { buf(name) += f }
-  def size(name: String): Long = buf(name).synchronized { buf(name).size.toLong }
-  def slice(name: String, from: Long, until: Long): Seq[Frame] =
-    buf(name).synchronized { buf(name).slice(from.toInt, until.toInt).toSeq }
+
+  /** One channel's retained frames: positions are absolute, the frame at
+    * position p sits at index p - base, and frames below base are gone. */
+  private final class Channel(var base: Long) {
+    val frames = mutable.ArrayDeque.empty[Frame]
+    def end: Long = base + frames.size
+  }
+  private val channels = new java.util.concurrent.ConcurrentHashMap[String, Channel]()
+  private def chan(name: String): Channel =
+    channels.computeIfAbsent(name, _ => new Channel(0L))
+  private def locked[T](name: String)(f: Channel => T): T = {
+    val c = chan(name)
+    c.synchronized(f(c))
+  }
+
+  def append(name: String, f: Frame): Unit = locked(name)(_.frames += f)
+  /** End offset: the absolute position one past the last appended frame. */
+  def size(name: String): Long = locked(name)(_.end)
+  /** The lowest position still held: frames below it were trimmed. */
+  def base(name: String): Long = locked(name)(_.base)
+  /** Frames at absolute positions [from, until). Positions below the
+    * trimmed base are gone, and asking for them is an error, never a
+    * shorter answer. */
+  def slice(name: String, from: Long, until: Long): Seq[Frame] = locked(name) { c =>
+    require(from >= c.base && from <= until && until <= c.end,
+      s"channel $name holds positions [${c.base}, ${c.end}), asked for [$from, $until)")
+    c.frames.slice((from - c.base).toInt, (until - c.base).toInt).toSeq
+  }
+  /** Drops the frames below `end`: a committed micro-batch never reads
+    * them again. */
+  def trim(name: String, end: Long): Unit = locked(name) { c =>
+    val n = math.min(math.max(end - c.base, 0L), c.frames.size.toLong).toInt
+    c.frames.remove(0, n)
+    c.base += n
+  }
+  /** Starts an empty channel at absolute position `base`. */
+  private[graft] def open(name: String, base: Long): Unit =
+    channels.put(name, new Channel(base))
   def clear(): Unit = channels.clear()
 
   val schema: StructType = StructType(Seq(
@@ -91,10 +125,11 @@ private final case class TickRange(channel: String, from: Long, until: Long)
   extends InputPartition
 
 private final class TickMicroBatchStream(channel: String) extends MicroBatchStream {
-  override def initialOffset(): Offset = TickOffset(0L)
+  override def initialOffset(): Offset = TickOffset(TickChannels.base(channel))
   override def latestOffset(): Offset = TickOffset(TickChannels.size(channel))
   override def deserializeOffset(json: String): Offset = TickOffset(json.toLong)
-  override def commit(end: Offset): Unit = ()
+  override def commit(end: Offset): Unit =
+    TickChannels.trim(channel, end.asInstanceOf[TickOffset].pos)
   override def stop(): Unit = ()
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
     Array(TickRange(channel, start.asInstanceOf[TickOffset].pos,

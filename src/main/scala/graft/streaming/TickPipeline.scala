@@ -36,9 +36,9 @@ object TickPipeline {
   }
 
   /** Wire the DSv2 WSS source (sources.TickStreamSource: exchange, pair,
-    * frame, ts) into the pipeline: reverse dim lookup pair -> isin (J2,
-    * broadcast, null on miss — reference main.py:395 semantics), then the
-    * shared normalize. */
+    * frame, ts) into the pipeline: reverse dim lookup pair -> isin (J2, a
+    * map projection, null on miss — reference main.py:395 semantics), then
+    * the shared normalize. */
   def fromWss(spark: SparkSession)(stream: DataFrame): DataFrame =
     normalize(graft.ops.DimJoins.reverse(spark)(stream)
       .withColumn("isin", col("isin_resolved")).drop("isin_resolved"))

@@ -82,7 +82,11 @@ object LaneProfile {
         exec()
         val wall = (System.nanoTime() - t0) / 1e9
         Thread.sleep(800) // listener bus drain
-        val ordered = jobs.toSeq.sortBy(_._1)
+        // a job or execution with no end event has no wall: attributing
+        // it would print negative times, so it is counted and left out
+        val ordered = jobs.toSeq.filter(_._2.end > 0).sortBy(_._1)
+        val finishedExecs = execs.toSeq.filter(_._2.end > 0)
+        val unfinished = jobs.size - ordered.size + execs.size - finishedExecs.size
         val jobWall = ordered.map(j => j._2.end - j._2.start).sum / 1000.0
         // merged union of job intervals vs merged union of exec intervals:
         // wall outside every SQL execution = pure driver glue; inside an
@@ -97,32 +101,34 @@ object LaneProfile {
           tot + (curE - curS).max(0L)
         }
         val jobSpan = mergedSpan(ordered.map(j => (j._2.start, j._2.end)))
-        val execSpan = mergedSpan(execs.values.toSeq.map(e => (e.start, e.end)))
+        val execSpan = mergedSpan(finishedExecs.map(e => (e._2.start, e._2.end)))
         println(f"[prof] ===== $name wall=$wall%6.2f s jobs=${ordered.size} " +
-          f"inJobs=$jobWall%6.2f s (gaps=${wall - jobWall}%5.2f s driver-side)" +
+          f"inJobs=$jobWall%6.2f s (gaps=${(wall - jobSpan / 1000.0).max(0.0)}%5.2f s driver-side)" +
           f" sqlExecs=${execs.size} jobSpan=${jobSpan / 1000.0}%5.2f" +
           f" execSpan=${execSpan / 1000.0}%5.2f (plan/bcast inside execs=" +
-          f"${(execSpan - jobSpan) / 1000.0}%5.2f, outside execs=" +
-          f"${wall - execSpan / 1000.0}%5.2f)")
+          f"${(execSpan - jobSpan).max(0L) / 1000.0}%5.2f, outside execs=" +
+          f"${(wall - execSpan / 1000.0).max(0.0)}%5.2f) unfinished=$unfinished")
         // per-execution table (round 22): each SQL execution's wall, its
         // jobs, and the planning/broadcast share (exec wall minus the jobs
         // inside it) — the direct localization for "too many
-        // materializations" findings
-        val t0ms = execs.values.map(_.start).toSeq.sorted.headOption.getOrElse(0L)
-        execs.toSeq.sortBy(_._2.start).foreach { case (eid, er) =>
-          val inside = ordered.filter(j =>
+        // materializations" findings. Jobs are merged and clipped to the
+        // execution, so concurrent or overhanging jobs cannot push
+        // plan/bcast below zero.
+        val t0ms = finishedExecs.map(_._2.start).sorted.headOption.getOrElse(0L)
+        finishedExecs.sortBy(_._2.start).foreach { case (eid, er) =>
+          val inside = ordered.filter(j => j._2.end > 0 &&
             j._2.start >= er.start && j._2.end <= er.end + 50)
-          val jw = inside.map(j => j._2.end - j._2.start).sum
+          val jw = mergedSpan(inside.map(j => (j._2.start, j._2.end.min(er.end))))
           println(f"[prof] exec=$eid%3d t+${(er.start - t0ms) / 1000.0}%6.2f " +
             f"wall=${er.end - er.start}%5d ms jobs=${inside.size}%2d " +
-            f"(jobWall=$jw%5d ms, plan/bcast=${er.end - er.start - jw}%5d ms) " +
+            f"(jobWall=$jw%5d ms, plan/bcast=${(er.end - er.start - jw).max(0L)}%5d ms) " +
             f"[${inside.map(_._1).mkString(",")}] " +
             er.desc.replace('\n', ' '))
         }
         var prevEnd = 0L
         ordered.foreach { case (jid, r) =>
-          val gap = if (prevEnd == 0) 0 else r.start - prevEnd
-          prevEnd = r.end
+          val gap = if (prevEnd == 0) 0 else (r.start - prevEnd).max(0L)
+          prevEnd = prevEnd.max(r.end)
           println(f"[prof] job=$jid%3d wall=${r.end - r.start}%5d ms " +
             f"(gap-before=$gap%5d ms) stages=${r.stages.size}")
           r.stages.toSeq.sortBy(_._1).foreach(s => println("[prof]   " + s._2))

@@ -12,39 +12,17 @@ class PlanShapeSpec extends SparkSpec {
   /** Join NODES in the executed plan, counted structurally (not "Join"
     * substrings — operator names reappear in condition/reuse/AQE
     * annotation lines). CartesianProductExec is a BaseJoinExec too. */
-  private def countJoins(sp: org.apache.spark.sql.execution.SparkPlan): Int = {
-    val self = sp match {
-      case _: org.apache.spark.sql.execution.joins.BaseJoinExec => 1
-      case _ => 0
-    }
-    val nested = sp match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        countJoins(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        countJoins(q.plan)
-      case _ => 0
-    }
-    self + nested + sp.children.map(countJoins).sum
-  }
+  private def countJoins(sp: org.apache.spark.sql.execution.SparkPlan): Int =
+    planNodes(sp).count(_.isInstanceOf[
+      org.apache.spark.sql.execution.joins.BaseJoinExec])
 
   /** Shuffle-exchange NODES, counted structurally like [[countJoins]]
     * (reused-exchange and AQE wrapper lines would double-count a
     * substring match). BroadcastExchange deliberately NOT counted. */
   private def countShuffles(
-      sp: org.apache.spark.sql.execution.SparkPlan): Int = {
-    val self = sp match {
-      case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => 1
-      case _ => 0
-    }
-    val nested = sp match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        countShuffles(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        countShuffles(q.plan)
-      case _ => 0
-    }
-    self + nested + sp.children.map(countShuffles).sum
-  }
+      sp: org.apache.spark.sql.execution.SparkPlan): Int =
+    planNodes(sp).count(_.isInstanceOf[
+      org.apache.spark.sql.execution.exchange.ShuffleExchangeExec])
 
   test("flagship broadcasts the nation dim and pushes the shipdate filter") {
     val p = plan("flagship_revenue_by_nation")
@@ -94,9 +72,20 @@ class PlanShapeSpec extends SparkSpec {
       "re-registered table lost its bucketing metadata")
   }
 
-  test("j1/j2 dim joins broadcast the 84-row dim") {
-    assert(plan("j1_dim_forward").contains("BroadcastHashJoin"))
-    assert(plan("j2_dim_reverse").contains("BroadcastHashJoin"))
+  test("j1/j2/e2 dim lookups plan no join and only the final sort's exchange") {
+    Seq("j1_dim_forward", "j2_dim_reverse", "e2_pipeline").foreach { name =>
+      val nodes = planNodes(
+        Queries.byName(name).fn(spark, d).queryExecution.executedPlan)
+      assert(!nodes.exists(_.isInstanceOf[
+        org.apache.spark.sql.execution.joins.BaseJoinExec]), name)
+      val exchanges = nodes.collect {
+        case e: org.apache.spark.sql.execution.exchange.Exchange =>
+          e.outputPartitioning
+      }
+      assert(exchanges.size <= 1 && exchanges.forall(_.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.physical.RangePartitioning]),
+        s"$name: $exchanges")
+    }
   }
 
   test("join hints are honored: SHUFFLE_HASH -> ShuffledHashJoin, MERGE -> SortMergeJoin") {

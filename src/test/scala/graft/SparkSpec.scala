@@ -22,4 +22,15 @@ trait SparkSpec extends AnyFunSuite {
   /** The formatted physical plan of a DataFrame (for plan-shape asserts). */
   def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString()
+
+  /** Every node of a physical plan, adaptive query stages included (their
+    * wrappers hide the stage plans from `children`). */
+  def planNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = p +: ((p match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+      planNodes(a.executedPlan)
+    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+      planNodes(q.plan)
+    case _ => Nil
+  }) ++ p.children.flatMap(planNodes))
 }

@@ -2,6 +2,10 @@ package graft.ops
 
 import graft.SparkSpec
 import graft.schema.CurrencyDim
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.functions.{broadcast, col}
 
 class DimJoinsSpec extends SparkSpec {
   import spark.implicits._
@@ -31,10 +35,35 @@ class DimJoinsSpec extends SparkSpec {
     assert(m("nosuchpair").isEmpty)
   }
 
-  test("both dim joins plan as BroadcastHashJoin (no shuffle of the fact side)") {
+  test("both dim lookups plan with no join and no exchange") {
+    def joinsAndExchanges(df: DataFrame) = planNodes(df.queryExecution.executedPlan).collect {
+      case p: BaseJoinExec => p
+      case p: Exchange => p
+    }
     val facts = Seq("XFC000000001").toDF("isin")
-    assert(planOf(DimJoins.forward(spark)(facts)).contains("BroadcastHashJoin"))
+    assert(joinsAndExchanges(DimJoins.forward(spark)(facts)).isEmpty)
     val facts2 = Seq("btceur").toDF("pair")
-    assert(planOf(DimJoins.reverse(spark)(facts2)).contains("BroadcastHashJoin"))
+    assert(joinsAndExchanges(DimJoins.reverse(spark)(facts2)).isEmpty)
+  }
+
+  test("both dim lookups return the rows and schema of the dim joins " +
+      "they replace, over every key, misses and a null key") {
+    val dim = CurrencyDim.rows.toDF()
+    // the key sits in the middle, so the key-first reordering is checked
+    def facts(keys: Seq[String], key: String) =
+      (keys ++ Seq("nosuch", "", null, keys.head)).zipWithIndex
+        .map { case (k, i) => (i, k, s"t$i") }.toDF("n", key, "tag")
+    def same(got: DataFrame, want: DataFrame): Unit = {
+      assert(got.schema == want.schema)
+      assert(got.collect().map(_.toString).sorted.toSeq ==
+        want.collect().map(_.toString).sorted.toSeq)
+    }
+    val byIsin = facts(CurrencyDim.rows.map(_.isin), "isin")
+    same(DimJoins.forward(spark)(byIsin),
+      byIsin.join(broadcast(dim), Seq("isin"), "inner"))
+    val byPair = facts(CurrencyDim.rows.map(_.pair), "pair")
+    same(DimJoins.reverse(spark)(byPair),
+      byPair.join(broadcast(dim.select(col("pair"),
+        col("isin").as("isin_resolved"))), Seq("pair"), "left"))
   }
 }

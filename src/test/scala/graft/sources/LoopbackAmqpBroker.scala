@@ -49,6 +49,8 @@ final class LoopbackAmqpBroker(expectUser: String, expectPass: String,
   val declares = new ArrayBuffer[Declared]()
   val messages = new ArrayBuffer[Delivered]()
   @volatile var connections = 0
+  /** connections whose socket the broker has not yet seen close */
+  val openConnections = new java.util.concurrent.atomic.AtomicInteger(0)
   @volatile var authFailures = 0
   @volatile var confirmsSelected = 0
   /** the client tune-ok values the broker accepted, for assertions */
@@ -68,13 +70,17 @@ final class LoopbackAmqpBroker(expectUser: String, expectPass: String,
     try while (running) {
       val sock = server.accept()
       synchronized { connections += 1 }
+      openConnections.incrementAndGet()
       // one thread per connection, like a real broker — a Spark
       // executor-side sink copy dials its own connection while the
       // driver's is still open (the per-partition connection model)
       val worker = new Thread(() => {
         try serve(sock)
         catch { case _: Exception => () }
-        finally { try sock.close() catch { case _: Exception => () } }
+        finally {
+          try sock.close() catch { case _: Exception => () }
+          openConnections.decrementAndGet()
+        }
       }, "loopback-amqp-conn")
       worker.setDaemon(true)
       worker.start()

@@ -209,6 +209,30 @@ class SourcesSpec extends SparkSpec {
     } finally { sink.close(); broker.close() }
   }
 
+  test("S6'/S7 each partition's sink copy is closed: every message lands " +
+      "and no connection stays open") {
+    val broker = new LoopbackAmqpBroker("guest", "s3cret")
+    val sink = new AmqpSink("127.0.0.1", broker.port, "guest", "s3cret")
+    try {
+      import spark.implicits._
+      val sc = spark.sparkContext
+      val envelopes = (1 to 12).map(i => s"""{"n":$i}""")
+      QueueSink.publishBatch(sc.parallelize(envelopes, 4).toDF("envelope"),
+        sink, "ticks")
+      QueueSink.writebackStates(sc.parallelize(Seq((1L, 1100), (2L, 1200),
+        (3L, 1300)), 3).toDF("job_id", "action"), sink, "jobs")
+      val deadline = System.currentTimeMillis() + 10000
+      while ((broker.messages.size < 15 || broker.openConnections.get() > 0) &&
+        System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(broker.messages.filter(_.queue == "ticks").map(_.body).sorted ==
+        envelopes.sorted)
+      assert(broker.messages.filter(_.queue.startsWith("jobs/")).size == 3)
+      assert(broker.connections == 7, s"one per partition, got ${broker.connections}")
+      assert(broker.openConnections.get() == 0,
+        s"${broker.openConnections.get()} connections left open")
+    } finally { sink.close(); broker.close() }
+  }
+
   test("S6' live AMQP: an abrupt broker drop re-dials once and the " +
       "publish succeeds; bad credentials fail CLOSED with false") {
     val broker = new LoopbackAmqpBroker("guest", "s3cret",

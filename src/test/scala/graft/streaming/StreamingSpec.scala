@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -271,7 +272,7 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("J1 broadcast dim join runs unchanged on a streaming frame") {
+  test("J1 dim lookup runs unchanged on a streaming frame") {
     val in = MemoryStream[(String, String, Timestamp)](spark)
     val ticks = in.toDF().toDF("exchange", "isin", "ts")
     val joined = graft.ops.DimJoins.forward(spark)(ticks)
@@ -348,6 +349,81 @@ class StreamingSpec extends SparkSpec {
     assert(miss._1 == "nosuchpair" && miss._2.isEmpty) // J2 null on miss
   }
 
+  test("S5+ST3 a fromWss micro-batch runs exactly one Spark job: the " +
+      "publish, with no dim broadcast beside it") {
+    TickChannels.clear()
+    InMemoryQueues.clear()
+    // streaming jobs carry their query and batch ids as local properties;
+    // a marker job run afterwards flushes the listener bus (in order)
+    val jobsByBatch = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    @volatile var queryId = ""
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          if (p.getProperty("sql.streaming.queryId") == queryId)
+            jobsByBatch.merge(p.getProperty("streaming.sql.batchId"), 1, _ + _)
+          if (p.getProperty("graft.test.marker") != null) flushed.countDown()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val frame = Array(10.0, 0, 12.0, 0, 0, 0, 11.0, 100.0, 13.0, 9.0)
+    try {
+      val q = TickPipeline.publishStream(TickPipeline.fromWss(spark)(
+        spark.readStream.format("graft.sources.TickStreamSource")
+          .option("channel", "c6").load()),
+        new InMemorySink, "onejob", Trigger.ProcessingTime(0L))
+      queryId = q.id.toString
+      (0 until 3).foreach { b =>
+        TickChannels.append("c6", ("btfx", if (b == 1) "nosuchpair" else "btceur",
+          frame, 1704067200000000L + b))
+        q.processAllAvailable()
+      }
+      q.stop()
+      val batches = q.recentProgress.filter(_.numInputRows > 0)
+        .map(_.batchId.toString).toSet
+      spark.sparkContext.setLocalProperty("graft.test.marker", "1")
+      try spark.sparkContext.parallelize(Seq(1)).count()
+      finally spark.sparkContext.setLocalProperty("graft.test.marker", null)
+      assert(flushed.await(10, java.util.concurrent.TimeUnit.SECONDS))
+      assert(InMemoryQueues.drain("onejob").size == 3)
+      assert(batches.nonEmpty && jobsByBatch.keySet.asScala == batches,
+        s"batches $batches, jobs by batch $jobsByBatch")
+      assert(jobsByBatch.values.asScala.forall(_ == 1), jobsByBatch.toString)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("S5 commit trims the channel: retained frames stay bounded across " +
+      "batches, and positions past Int.MaxValue slice correctly") {
+    TickChannels.clear()
+    val start = Int.MaxValue.toLong - 250
+    TickChannels.open("c7", start) // no 2^31 frames needed to get here
+    val q = spark.readStream.format("graft.sources.TickStreamSource")
+      .option("channel", "c7").load()
+      .select(element_at(col("frame"), 1).as("v"))
+      .writeStream.outputMode("append").format("memory").queryName("trimmed")
+      .start()
+    (0 until 6).foreach { b =>
+      (0 until 100).foreach(i => TickChannels.append("c7",
+        ("btfx", "btceur", Array((b * 100 + i).toDouble), 1L)))
+      q.processAllAvailable()
+      val held = TickChannels.size("c7") - TickChannels.base("c7")
+      assert(held <= 200, s"batch $b: $held frames still held")
+    }
+    q.stop()
+    assert(spark.table("trimmed").as[Double].collect().sorted.toSeq ==
+      (0 until 600).map(_.toDouble))
+    assert(TickChannels.size("c7") == start + 600)
+    assert(TickChannels.base("c7") > Int.MaxValue.toLong)
+    val end = TickChannels.size("c7")
+    assert(TickChannels.slice("c7", end - 3, end).map(_._3(0)) ==
+      Seq(597.0, 598.0, 599.0))
+    // trimmed positions are gone: asking for them is an error, not a
+    // shorter answer
+    intercept[IllegalArgumentException](TickChannels.slice("c7", start, end))
+  }
+
   /** Bitfinex v1-shaped ticker frame for the loopback server: positions
     * after the chanId are bid, bid_sz, ask, ask_sz, dchg, dchg_pct, last,
     * volume, high, low — main.py:401-405's data[0][0] indices. */
@@ -380,6 +456,9 @@ class StreamingSpec extends SparkSpec {
     try {
       assert(client.start(), "subscribe ack not received")
       awaitFrames("ws1", 3)
+      // a channel has one consumer, whose commits trim it: the second
+      // query below reads a copy of the socket's frames
+      TickChannels.slice("ws1", 0, 3).foreach(TickChannels.append("ws1b", _))
       val stream = spark.readStream.format("graft.sources.TickStreamSource")
         .option("channel", "ws1").load()
       val q = TickPipeline.bars(
@@ -402,7 +481,7 @@ class StreamingSpec extends SparkSpec {
       val q2 = TickPipeline.bars(
           TickPipeline.fromWss(spark)(
             spark.readStream.format("graft.sources.TickStreamSource")
-              .option("channel", "ws1").load())
+              .option("channel", "ws1b").load())
             .select(col("isin"), col("last_price"), col("volume"), col("ts")),
           delay = "0 seconds", width = "1 minute")
         .select(expr("unix_micros(window.start)").as("start_us"),
