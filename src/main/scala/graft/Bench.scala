@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -22,7 +21,7 @@ object Bench {
     * [[drain]] waits for every started job to finish reporting before the
     * counters are read (bounded poll — a bench query always runs at least
     * one job, the noop write). */
-  private final class MetricsListener
+  private[graft] final class MetricsListener
       extends org.apache.spark.scheduler.SparkListener {
     val shuffleBytes = new AtomicLong(0L)
     val rowsRead = new AtomicLong(0L)
@@ -135,14 +134,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // AQE is on by default: Bench times the adaptive plans
+    val spark = SparkEntry.sessionBuilder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fns = SparkEntry.queries
     val round = detectRound()
@@ -232,6 +225,19 @@ object Bench {
     println(compact)
   }
 
+  /** Full JSON string escape incl. control chars (no surrounding quotes):
+    * Spark exception toStrings are multi-line, and a raw \n would make
+    * the JSON line unparseable exactly when errors need reporting. */
+  private[graft] def esc(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }
+
   /** Hard budget for the driver-facing final stdout line: the driver keeps
     * only the final ~2000 chars of stdout and parses the last line, so the
     * compact JSON must fit with margin for the trailing newline + any
@@ -264,18 +270,6 @@ object Bench {
       metrics: Map[String, (Long, Long, Long)],
       errors: Seq[(String, String)],
       sfDir: String): (String, String) = {
-    // full JSON string escape incl. control chars — Spark exception
-    // toStrings are multi-line, and a raw \n here would make the driver's
-    // json.load fail exactly when errors need reporting
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     // dedupe defensively even though main's LinkedHashMap already keys by
     // query name — duplicate JSON keys are exactly the r12 failure class
     val dedupedErrors = {

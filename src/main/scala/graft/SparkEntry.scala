@@ -25,4 +25,15 @@ object SparkEntry {
 
   /** Headline subset timed by [[Bench]]. */
   def benchQueries: Seq[String] = Queries.all.filter(_.bench).map(_.name)
+
+  /** The one local session shape: `cpus` cores and as many shuffle
+    * partitions, UTC, `events.parquet`'s TIMESTAMP(NANOS) read as long,
+    * no UI. [[Bench]] and [[Verify]] use it as is. */
+  private[graft] def sessionBuilder(cpus: Int): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
 }

@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
   * into the enclosing stage's generated loop with zero allocation.
   *
   * SEMANTICS — bit-identical to the ArgFold contract (spec-pinned by
-  * AssignFoldSpec / AssignFoldProbe):
+  * AssignFoldSpec; real-data parity in BASELINE.md "Fold assignment"):
   *  - comparison walks Spark's double total order
   *    (java.lang.Double.compare: NaN largest, -0.0 < 0.0); ties on the
   *    score break toward the SMALLEST id;

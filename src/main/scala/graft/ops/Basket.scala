@@ -73,7 +73,8 @@ object Basket {
     *   - only capped-in baskets (≤ maxBasket distinct items) ever
     *     reach [[cappedBaskets]]' per-basket collect.
     * The numbered repartition is AQE-coalesce-exempt, so the distinct
-    * runs at full width (the round-18 StageAudit lesson).
+    * runs at full width (the round-18 lesson, BASELINE.md "Width
+    * guards").
     *
     * Round 20: the checkpoint moved ABOVE the cap. The r19 form
     * checkpointed the capped frame, whose plan contains the over-cap

@@ -49,7 +49,8 @@ object Clustering {
     // graft_argmin_l2 kernel (dp = -1: raw doubles, no rounding — the
     // k-means contract), replacing the interpreted aggregate() fold.
     // Same (dist2 ASC, cid ASC) total order (ArgBestCellSpec pins
-    // kernel == fold; AssignFoldProbe pins real-data parity); a ragged
+    // kernel == fold; real-data parity measured in BASELINE.md
+    // "Round-19 fold-vs-kernel scaling"); a ragged
     // centroid's uncomputable distance scores the NaN sentinel and
     // loses every real comparison; a fully-ragged row ties down to
     // the lowest cid with dist2 = NaN — inertia() then propagates NaN

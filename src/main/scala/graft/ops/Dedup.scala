@@ -377,39 +377,6 @@ object Dedup {
     labels.select(col("src").as(idCol), col("label").as("cluster"))
   }
 
-  /** localCheckpoint + plan-statistics reset (the [[graft.ops.Graph]]
-    * checkpointFresh discipline, round 17): checkpoint PRESERVES the
-    * source plan's Statistics and join stats MULTIPLY, so a loop that
-    * joins its own previous output grows the preserved sizeInBytes
-    * BigInt's digit count geometrically — by enough rounds the stats
-    * visitor itself dominates planning (measured 980 CPU-s of
-    * BigInteger math in the scc loops). The component loops apply it
-    * EVERY 4th round rather than every round: that caps the preserved
-    * number at ~3⁴ digits growth per window (harmless) while sparing
-    * the intermediate rounds the extra createDataFrame round-trip.
-    * (A checkpoint carries NO partitioning under AQE — the round-18
-    * [[graft.ops.Fanout]] finding — so there is nothing to "keep"
-    * between rounds either way; the evolving frame re-exchanges on its
-    * join key each round regardless, and those exchanges are small.) */
-  private def checkpointFreshD(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint()
-    cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
-  }
-
-  /** The single long value of a named `observe` metric, read from the
-    * dataset's EXECUTED plan (round 21): CollectMetrics is backed by an
-    * accumulator, and accumulator updates arrive with task completion —
-    * so after the action that materialized `df` (the loop checkpoints
-    * above), the value is already on the driver. Observation.get would
-    * wait on the ASYNC listener bus for the same number, which under a
-    * busy scheduler adds per-round latency for nothing. */
-  private def observedCount(df: DataFrame, name: String): Long = {
-    val row = df.queryExecution.observedMetrics.getOrElse(name,
-      throw new IllegalStateException(
-        s"observed metric '$name' absent — checkpoint did not execute"))
-    row.getLong(0)
-  }
-
   /** The min-label propagation core of [[components]], WITHOUT the
     * loud-failure contract: runs at most `maxIter` rounds and reports
     * whether a fixpoint was reached, so [[componentsHybrid]] can spend a
@@ -439,7 +406,7 @@ object Dedup {
       // second action is gone — one Spark job per round, not two. The
       // count is exact (CollectMetrics sees every row exactly once in
       // the checkpoint's single full pass), and it is read from the
-      // executed plan's accumulator ([[observedCount]]) rather than
+      // executed plan's accumulator ([[Graph.observedCount]]) rather than
       // through Observation's listener — accumulators land with job
       // completion, so the loop never waits on the async listener bus.
       val joinedPlan = labels.join(
@@ -453,9 +420,16 @@ object Dedup {
             .as("_chg"))
         .observe("mlr", count(when(col("_chg"), 1)).as("n_chg"))
         .select(col("src"), col("label"))
-      val joined = if (i % 4 == 3) checkpointFreshD(joinedPlan)
+      // plan-statistics reset ([[Graph.checkpointFresh]]) EVERY 4th
+      // round rather than every round: that caps the preserved stats
+      // number at ~3⁴ digits growth per window (harmless) while sparing
+      // the intermediate rounds the extra createDataFrame round-trip. (A
+      // checkpoint carries NO partitioning under AQE — the round-18
+      // [[graft.ops.Fanout]] finding — so there is nothing to "keep"
+      // between rounds either way.)
+      val joined = if (i % 4 == 3) Graph.checkpointFresh(joinedPlan)
         else joinedPlan.localCheckpoint()
-      converged = observedCount(joinedPlan, "mlr") == 0L
+      converged = Graph.observedCount(joinedPlan, "mlr") == 0L
       labels = joined
       i += 1
     }
@@ -570,9 +544,10 @@ object Dedup {
         .unionAll(ssMin.select(col("hi"), col("m").as("lo")))
         .filter(col("hi") =!= col("lo")).distinct()
         .observe("star", count(lit(1)).as("n_edges"))
-      val afterSmall = if (i % 4 == 3) checkpointFreshD(afterSmallPlan)
+      // every 4th round a stats reset, as in minLabelRounds
+      val afterSmall = if (i % 4 == 3) Graph.checkpointFresh(afterSmallPlan)
         else afterSmallPlan.localCheckpoint()
-      val newCount = observedCount(afterSmallPlan, "star")
+      val newCount = Graph.observedCount(afterSmallPlan, "star")
       if (edgeCount < 0L) edgeCount = edges.count()
       converged = newCount == edgeCount &&
         afterSmall.join(edges, Seq("hi", "lo"), "left_anti").isEmpty

@@ -56,7 +56,8 @@ private[ops] object Fanout {
     * scales with the number of tasks the exchange fans into —
     * threshold = defaultParallelism × [[pinPerTaskBytes]]. The
     * per-task constant comes from the two measured local[32] operating
-    * points (PinLaneAb sf0.1 vs GraphStressProbe 1M nodes, round 18):
+    * points (sf0.1 lanes vs the 1M-node stress graph, round 18 —
+    * BASELINE.md "The static-frame pin, size-gated"):
     * a 1.17M-row (~100-108 MB cached ⇒ ~3.4 MB/task) static edge
     * frame LOSES with the pin at 3-4 rounds (sssp 4.0 s pinned vs
     * 2.3 s checkpointed, ppr 1.23x, weighted pagerank 1.72x), while
@@ -142,14 +143,14 @@ private[ops] object Fanout {
     * the small frame" discipline never actually held in the plans: every
     * round's join re-exchanged the static frame (ENSURE_REQUIREMENTS,
     * and therefore also AQE-coalescible — the narrow+hot per-round
-    * stages StageAudit flags). An InMemoryRelation, by contrast,
-    * preserves its child plan's outputPartitioning, and the child here
-    * ends in a REPARTITION_BY_NUM exchange AQE cannot coalesce: each
-    * round's join reads the cache co-partitioned at full parallelism,
-    * exchanging nothing but the small evolving frame.
+    * stages of BASELINE.md "Width guards"). An InMemoryRelation, by
+    * contrast, preserves its child plan's outputPartitioning, and the
+    * child here ends in a REPARTITION_BY_NUM exchange AQE cannot
+    * coalesce: each round's join reads the cache co-partitioned at full
+    * parallelism, exchanging nothing but the small evolving frame.
     *
     * Why the pin is SIZE-GATED: below [[pinMinBytes]] the pin's fixed
-    * costs exceed what it saves (the PinLaneAb numbers above), so small
+    * costs exceed what it saves (the sf0.1 numbers above), so small
     * frames keep the checkpoint form — AQE coalesces their per-round
     * exchanges to a handful of cheap tasks, which IS the right plan for
     * a frame that fits in one. The decision reads the checkpoint's

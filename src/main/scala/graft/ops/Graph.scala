@@ -105,13 +105,10 @@ object Graph {
     * still exact and [[pageRankIncremental]] reads it back instead of
     * recomputing it. Returns hist(0..iters); each frame (node, score)
     * is localCheckpoint'd (it is re-read per incremental round).
-    * Same integer-ppm kernel as [[pageRank]], round for round. */
-  def pageRankWithHistory(edges: DataFrame, iters: Int): Seq[DataFrame] =
-    pageRankStateWithHistory(edges, iters)._1
-
-  /** [[pageRankWithHistory]] plus the retained OUT-DEGREE frame —
-    * the full standing state incremental maintenance needs (round 20,
-    * r19 verdict item 4): with deg0 retained like the score history,
+    * Same integer-ppm kernel as [[pageRank]], round for round.
+    *
+    * Also returns the retained OUT-DEGREE frame (round 20, r19 verdict
+    * item 4): with deg0 retained like the score history,
     * [[pageRankIncremental]]'s maintain path patches degrees from the
     * change set instead of re-aggregating the whole edge list — the
     * last O(graph) shuffle on the maintain path. */
@@ -192,16 +189,14 @@ object Graph {
     * nothing and is never even read (the history anti-join is label
     * metadata, not graph data).
     *
-    * `hist` comes from [[pageRankWithHistory]] over the v0 edges;
-    * `changed` carries one row per net-changed DIRECTED edge (src, dst)
-    * — inserts and deletes alike (the dirty seed only reads endpoints,
-    * so the op tag is not needed). Exactness is judged: the maintained
-    * result hash-matches the oracle's direct unrolled recompute over
-    * the merged final edge set (x7_incr_pagerank). */
+    * `hist` and `deg0` come from [[pageRankStateWithHistory]] over the
+    * v0 edges; `changed` carries one row per net-changed DIRECTED edge
+    * (src, dst) — inserts and deletes alike (the dirty seed only reads
+    * endpoints, so the op tag is not needed). Exactness is judged: the
+    * maintained result hash-matches the oracle's direct unrolled
+    * recompute over the merged final edge set (x7_incr_pagerank). */
   def pageRankIncremental(hist: Seq[DataFrame], edges1: DataFrame,
-      changed: DataFrame, iters: Int,
-      broadcastFrontier: Boolean = true,
-      deg0: Option[DataFrame] = None): DataFrame = {
+      changed: DataFrame, iters: Int, deg0: DataFrame): DataFrame = {
     require(hist.length == iters + 1,
       s"history must carry rounds 0..$iters, got ${hist.length} frames")
     require(iters >= 1, s"iters must be >= 1, got $iters")
@@ -218,22 +213,18 @@ object Graph {
     // annotation and mix lookup all hash the frontier-sized side and
     // stream-scan the big one — zero graph-sized shuffle per round.
     val e = edges1.localCheckpoint(eager = false)
-    // `broadcastFrontier` (default) HINTS the frontier-keyed sides into
-    // broadcast joins: a checkpoint's preserved plan statistics
-    // over-estimate the dirty frames, so the optimizer otherwise plans
-    // sort-merge joins whose map sides shuffle the GRAPH-sized frame
-    // every round (measured at 1M nodes: 180 MB maintained shuffle for
-    // a 100-edge change — the frontier maintenance thesis inverted).
-    // The hint encodes the operator's own applicability contract:
-    // maintenance beats recompute exactly when the invalidation
-    // frontier is broadcast-class; a caller whose change set reaches a
-    // graph-scale frontier should pass false (honest shuffled plans)
-    // or simply rerun pageRank.
-    def bcast(df: DataFrame): DataFrame =
-      if (broadcastFrontier) broadcast(df) else df
+    // the frontier-keyed sides are HINTED into broadcast joins: a
+    // checkpoint's preserved plan statistics over-estimate the dirty
+    // frames, so the optimizer otherwise plans sort-merge joins whose
+    // map sides shuffle the GRAPH-sized frame every round (measured at
+    // 1M nodes: 180 MB maintained shuffle for a 100-edge change — the
+    // frontier maintenance thesis inverted). The hint encodes the
+    // operator's own applicability contract: maintenance beats
+    // recompute exactly when the invalidation frontier is
+    // broadcast-class.
     val srcChanged = changed.select(col("src")).distinct()
     // DEGREES (round 20, r19 verdict item 4 — the last O(graph)
-    // shuffle on the maintain path, now gone when the caller retains
+    // shuffle on the maintain path, gone because the caller retains
     // deg0 from [[pageRankStateWithHistory]]): only sources whose
     // out-edge SET changed can have a changed out-degree, and every
     // such source has a row in `changed` — so v1 degrees = v0 degrees
@@ -242,20 +233,13 @@ object Graph {
     // a frontier-sized partial-combining count). A source that lost
     // its last edge vanishes (no recount row — correct: the v1 seed
     // frame is built from deg); a brand-new source recounts in.
-    // Without deg0 the degree frame falls back to the full
-    // aggregation (partial-combined, the r19 form).
-    val deg = (deg0 match {
-      case Some(d0) =>
-        d0.join(bcast(srcChanged), Seq("src"), "left_anti")
-          .unionByName(e.join(bcast(srcChanged), Seq("src"), "left_semi")
-            .groupBy(col("src"))
-            .agg(count(lit(1)).cast("long").as("outdeg")))
-      case None =>
-        edges1.groupBy(col("src"))
-          .agg(count(lit(1)).cast("long").as("outdeg"))
-    }).localCheckpoint(eager = false)
+    val deg = deg0.join(broadcast(srcChanged), Seq("src"), "left_anti")
+      .unionByName(e.join(broadcast(srcChanged), Seq("src"), "left_semi")
+        .groupBy(col("src"))
+        .agg(count(lit(1)).cast("long").as("outdeg")))
+      .localCheckpoint(eager = false)
     val dirty1 = changed.select(col("dst").as("node"))
-      .unionByName(e.join(bcast(srcChanged), Seq("src"), "left_semi")
+      .unionByName(e.join(broadcast(srcChanged), Seq("src"), "left_semi")
         .select(col("dst").as("node")))
       .distinct().localCheckpoint(eager = false)
     // v1's round-0 frame: the constant seed over v1 sources
@@ -264,8 +248,8 @@ object Graph {
     var dirty = dirty1
     var newScores: DataFrame = null
     (1 to iters).foreach { k =>
-      newScores = bcast(bcast(e
-        .join(bcast(dirty.select(col("node").as("dst"))), Seq("dst"),
+      newScores = broadcast(broadcast(e
+        .join(broadcast(dirty.select(col("node").as("dst"))), Seq("dst"),
           "left_semi"))
         .join(deg, Seq("src")))
         .join(mixPrev.select(col("node").as("src"), col("score")),
@@ -277,16 +261,16 @@ object Graph {
         .localCheckpoint(eager = false)
       if (k < iters) {
         val nextDirty = dirty1.unionByName(
-            e.join(bcast(dirty.select(col("node").as("src"))), Seq("src"),
+            e.join(broadcast(dirty.select(col("node").as("src"))), Seq("src"),
                 "left_semi")
               .select(col("dst").as("node")))
           .distinct().localCheckpoint(eager = false)
-        mixPrev = hist(k).join(bcast(dirty), Seq("node"), "left_anti")
+        mixPrev = hist(k).join(broadcast(dirty), Seq("node"), "left_anti")
           .unionByName(newScores)
         dirty = nextDirty
       }
     }
-    hist(iters).join(bcast(dirty), Seq("node"), "left_anti")
+    hist(iters).join(broadcast(dirty), Seq("node"), "left_anti")
       .unionByName(newScores)
   }
 
@@ -1002,18 +986,19 @@ object Graph {
     * createDataFrame round-trip rebuilds the frame on a fresh leaf with
     * default stats — an O(rows) re-encode that keeps planning O(1) for
     * every later round. */
-  private def checkpointFresh(df: DataFrame): DataFrame = {
+  private[ops] def checkpointFresh(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint()
     cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
   }
 
   /** The single long value of a named `observe` metric, read from the
     * dataset's EXECUTED plan after the action that materialized it
-    * (round 21, the [[graft.ops.Dedup]] observedCount discipline):
-    * CollectMetrics is accumulator-backed, so the value lands with job
-    * completion — no second action per loop round and no wait on the
-    * async listener bus. */
-  private def observedCount(df: DataFrame, name: String): Long =
+    * (round 21): CollectMetrics is accumulator-backed, so the value
+    * lands with job completion — no second action per loop round and
+    * no wait on the async listener bus (Observation.get would wait on
+    * it for the same number). Shared with [[graft.ops.Dedup]]'s
+    * component loops. */
+  private[ops] def observedCount(df: DataFrame, name: String): Long =
     df.queryExecution.observedMetrics.getOrElse(name,
       throw new IllegalStateException(
         s"observed metric '$name' absent — checkpoint did not execute"))
@@ -1309,10 +1294,11 @@ object Graph {
       .localCheckpoint(eager = false)
     val hist = Seq.newBuilder[DataFrame]
     hist += labels
-    // width guard for the per-round vote join (round 18, StageAudit):
-    // in the checkpoint branch AQE sized the join from the ~10 MB vote
-    // bytes and ran the round's argmax CPU (4.6 s) on 8 tasks; the
-    // numbered repartition is AQE-exempt so the stage keeps full width.
+    // width guard for the per-round vote join (round 18, BASELINE.md
+    // "Width guards"): in the checkpoint branch AQE sized the join from
+    // the ~10 MB vote bytes and ran the round's argmax CPU (4.6 s) on 8
+    // tasks; the numbered repartition is AQE-exempt so the stage keeps
+    // full width.
     // In the pinned branch the cache already carries hash(nbr, n) and
     // EnsureRequirements elides this node as redundant.
     val votesWide = Fanout.byKeyNoCheckpoint(votes, "nbr")
@@ -1369,27 +1355,22 @@ object Graph {
     * Shuffle ledger per round: one node-semi restriction of the vote
     * frame, one mix equi-join, one partial-combining count — all
     * frontier-sized when the change is; nothing re-aggregates the
-    * graph. Same applicability contract as PageRank maintenance
-    * (`broadcastFrontier`): checkpoint-preserved plan statistics
-    * over-estimate dirty frames and would SMJ the graph side per
-    * round, so the frontier sides are broadcast-hinted by default; a
-    * graph-scale change should pass false or rerun labelPropagation.
+    * graph. Same applicability contract as PageRank maintenance:
+    * checkpoint-preserved plan statistics over-estimate dirty frames
+    * and would SMJ the graph side per round, so the frontier sides are
+    * broadcast-hinted.
     *
-    * `hist` comes from [[labelPropagationWithHistory]] over the v0
-    * edges; `changed` carries one row per net-changed edge (src, dst)
-    * in either direction — the dirty seed reads only endpoints.
-    * Exactness is judged: the maintained labeling hash-matches the
-    * oracle's direct unrolled recompute over the merged final edge
-    * set (x7_incr_lpa). */
+    * `hist` and `votes0` come from [[labelPropagationStateWithHistory]]
+    * over the v0 edges; `changed` carries one row per net-changed edge
+    * (src, dst) in either direction — the dirty seed reads only
+    * endpoints. Exactness is judged: the maintained labeling
+    * hash-matches the oracle's direct unrolled recompute over the
+    * merged final edge set (x7_incr_lpa). */
   def labelPropagationIncremental(hist: Seq[DataFrame], edges1: DataFrame,
-      changed: DataFrame, rounds: Int,
-      broadcastFrontier: Boolean = true,
-      votes0: Option[DataFrame] = None): DataFrame = {
+      changed: DataFrame, rounds: Int, votes0: DataFrame): DataFrame = {
     require(hist.length == rounds + 1,
       s"history must carry rounds 0..$rounds, got ${hist.length} frames")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    def bcast(df: DataFrame): DataFrame =
-      if (broadcastFrontier) broadcast(df) else df
     // VOTE FRAME (the 1M measurement that shaped this): re-deriving
     // v1's symmetric distinct vote frame is itself a graph-sized
     // shuffle (147.9 MB for a 100-edge change at 1M nodes — the
@@ -1398,7 +1379,7 @@ object Graph {
     // pairs named by the change set can differ, so drop them from v0
     // (broadcast anti, narrow) and re-derive just the touched pairs'
     // v1 state (broadcast semi stream-scan of edges1 + frontier-sized
-    // dedup). Without votes0 the full derivation is the fallback.
+    // dedup).
     val changedSym = changed
       .select(col("src").cast("long").as("node"),
         col("dst").cast("long").as("nbr"))
@@ -1406,26 +1387,21 @@ object Graph {
         col("src").cast("long").as("nbr")))
       .filter(col("node") =!= col("nbr"))
       .distinct().localCheckpoint(eager = false)
-    val votes = votes0 match {
-      case Some(v0) =>
-        // the frontier-sized `touched` frame is checkpointed (round 21,
-        // r20 ADVICE): without it the patched-votes subtree — a full
-        // edges1 stream-scan plus the frontier dedup — re-executed
-        // inside EVERY round's `into` materialization (rounds×
-        // redundant graph scans), unlike the None branch and the
-        // analogous deg patch in pageRankIncremental. Only `touched`
-        // is checkpointed, not the whole patched union, so v0 stays
-        // the single resident copy of the graph-sized frame.
-        val touched = lpaVotes(edges1
-          .select(col("src").cast("long").as("src"),
-            col("dst").cast("long").as("dst"))
-          .join(bcast(changedSym.select(col("node").as("src"),
-            col("nbr").as("dst"))), Seq("src", "dst"), "left_semi"))
-          .localCheckpoint(eager = false)
-        v0.join(bcast(changedSym), Seq("node", "nbr"), "left_anti")
-          .unionByName(touched)
-      case None => lpaVotes(edges1).localCheckpoint(eager = false)
-    }
+    // the frontier-sized `touched` frame is checkpointed (round 21,
+    // r20 ADVICE): without it the patched-votes subtree — a full edges1
+    // stream-scan plus the frontier dedup — re-executed inside EVERY
+    // round's `into` materialization (rounds× redundant graph scans),
+    // unlike the analogous deg patch in pageRankIncremental. Only
+    // `touched` is checkpointed, not the whole patched union, so v0
+    // stays the single resident copy of the graph-sized frame.
+    val touched = lpaVotes(edges1
+      .select(col("src").cast("long").as("src"),
+        col("dst").cast("long").as("dst"))
+      .join(broadcast(changedSym.select(col("node").as("src"),
+        col("nbr").as("dst"))), Seq("src", "dst"), "left_semi"))
+      .localCheckpoint(eager = false)
+    val votes = votes0.join(broadcast(changedSym), Seq("node", "nbr"), "left_anti")
+      .unionByName(touched)
     // endpoints of every changed edge, both roles (the frame is
     // symmetric, so an edge change dirties both ends)
     val dirty1 = changedSym.select(col("node")).distinct()
@@ -1447,7 +1423,7 @@ object Graph {
       // this round (measured: the un-checkpointed form re-evaluated
       // the votes plan three times per round — 580 MB of cache reads
       // each — and the maintain wall matched the full recompute)
-      val into = votes.join(bcast(dirty), Seq("node"), "left_semi")
+      val into = votes.join(broadcast(dirty), Seq("node"), "left_semi")
         .localCheckpoint(eager = false)
       val voteRows = if (k == 1)
         into.select(col("node"), col("nbr").as("label"))
@@ -1461,14 +1437,14 @@ object Graph {
         // sort-merge the node-sized mix against it, shuffling the
         // graph-sized side every round), so it rides the frontier
         // broadcast hint like every other dirty-keyed side
-        bcast(into).join(mixPrev.select(col("node").as("nbr"), col("label")),
+        broadcast(into).join(mixPrev.select(col("node").as("nbr"), col("label")),
             Seq("nbr"))
           .select(col("node"), col("label"))
           // self-vote: every dirty v1 node's own mix row — also what
           // guarantees a dirty node with no surviving edges but still
           // in v1 keeps labeling itself (cannot happen for edge-defined
           // node sets, but the mix row is the honest source either way)
-          .unionAll(mixPrev.join(bcast(dirty), Seq("node"), "left_semi"))
+          .unionAll(mixPrev.join(broadcast(dirty), Seq("node"), "left_semi"))
       newLabels = voteRows
         .groupBy(col("node"), col("label")).agg(count(lit(1)).as("cnt"))
         .groupBy(col("node"))
@@ -1479,12 +1455,12 @@ object Graph {
         val nextDirty = dirty1
           .unionByName(into.select(col("nbr").as("node")))
           .distinct().localCheckpoint(eager = false)
-        mixPrev = hist(k).join(bcast(dirty), Seq("node"), "left_anti")
+        mixPrev = hist(k).join(broadcast(dirty), Seq("node"), "left_anti")
           .unionByName(newLabels)
         dirty = nextDirty
       }
     }
-    hist(rounds).join(bcast(dirty), Seq("node"), "left_anti")
+    hist(rounds).join(broadcast(dirty), Seq("node"), "left_anti")
       .unionByName(newLabels)
   }
 
@@ -1725,7 +1701,7 @@ object Graph {
     var disc = lvl0.select(col("s"), col("v"))
     (1 to maxHops).foreach { _ =>
       // numbered repartition on the frontier JOIN INPUT (round 18,
-      // StageAudit): both hop-join exchanges (frontier checkpoint + the
+      // BASELINE.md "Width guards"): both hop-join exchanges (frontier checkpoint + the
       // small edge frame) are ENSURE_REQUIREMENTS and therefore
       // AQE-coalescible together, so the (s,v)-pair sigma EXPANSION the
       // join produces ran on 2 of 32 cores. One non-coalescible side
@@ -1837,7 +1813,8 @@ object Graph {
     // checkpointed edge frame is already on the join partitioning.
     // repartition FIRST, then distinct: hashpartitioning(dst) satisfies
     // the dedup agg's ClusteredDistribution(src, dst) (dst ⊆ keys), so
-    // the pair costs ONE exchange, not two (measured in ReachProbe)
+    // the pair costs ONE exchange, not two (BASELINE.md "r16 verdict
+    // perf items, measured closed", the reach row)
     // persist, not checkpoint (round 18): the distinct's aggregate
     // preserves the repartition's hash(dst) — and the CACHE keeps that
     // partitioning visible to every hop join, where a checkpoint's

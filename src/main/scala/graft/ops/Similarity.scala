@@ -139,15 +139,6 @@ object Similarity {
   private def planeSign(j: Int): String =
     s"transform(v, (x, d) -> if (pmod(hash($j, d), 2) = 0, x, -x))"
 
-  /** Sign-LSH bucket id from `nPlanes` hyperplane sign bits. */
-  def withBucket(df: DataFrame, vecCol: String, nPlanes: Int): DataFrame = {
-    val signs = (0 until nPlanes).map { j =>
-      s"(case when aggregate(${planeSign(j)}, cast(0 as double), (acc, x) -> acc + x) >= 0 then ${1 << j} else 0 end)"
-    }.mkString(" + ")
-    df.withColumn("v", asDouble(vecCol))
-      .withColumn("bucket", expr(signs).cast("int"))
-  }
-
   /** `nTables` independent sign-LSH bucket ids (table t uses planes
     * t*nPlanes .. t*nPlanes+nPlanes-1 of the same murmur3 family) — the
     * multi-table index, same banding shape as MinHash LSH. */
@@ -429,7 +420,8 @@ object Similarity {
     // division, HALF_UP rounding and the (score DESC, cid ASC)
     // total-order compare into the stage's generated loop. Semantics
     // bit-identical (ArgBestCellSpec pins kernel == fold on ties, NaN,
-    // ragged and random inputs; AssignFoldProbe pins real-data parity):
+    // ragged and random inputs; real-data parity measured in
+    // BASELINE.md "Round-19 fold-vs-kernel scaling"):
     // a null/ragged score loses in both directions, an all-null row
     // lands on the lowest cid, never a fabricated cell.
     val cents = broadcast(withNorm(
@@ -1023,9 +1015,9 @@ object Similarity {
   /** Round 18: each projected component is `graft_dot(vd, signs_k)`
     * against a CONSTANT-FOLDED ±1.0 sign array instead of a kOut × dim
     * tree of ±element_at terms. The old form generated 1024 codegen'd
-    * expressions whose Janino COMPILE dominated the lane (RpRecallProbe:
-    * 8.2 s cold at sf0.001 vs 1.1 s warm at any SF — pure compile, not
-    * data); this form compiles kOut small kernel calls. Numerics are
+    * expressions whose Janino COMPILE dominated the lane (BASELINE.md
+    * "rpProject": 8.2 s cold at sf0.001 vs 1.1 s warm at any SF — pure
+    * compile, not data); this form compiles kOut small kernel calls. Numerics are
     * bit-identical: graft_dot accumulates x[d]·s[d] ascending
     * left-assoc, and t·(±1.0) ≡ ±t exactly, so every partial sum
     * matches the oracle's ± element sums term for term (the seed 0.0

@@ -25,20 +25,29 @@ object QCore {
       val li = T(s, d, "lineitem")
         .filter(col("l_shipdate") >= lit("1996-01-01") &&
           col("l_shipdate") < lit("1997-01-01"))
+      // exact revenue: cents × (100 − discount in hundredths) is a row's
+      // revenue in 1e-4 units, summed as an integer and rounded half-up
+      // to cents once — a double sum rounds a half-cent tie by its
+      // summation order, so Spark and DuckDB could land apart
+      val units = round(col("l_extendedprice") * 100).cast("long") *
+        (lit(100L) - round(col("l_discount") * 100).cast("long"))
       li.join(T(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
         .join(T(s, d, "customer"), col("o_custkey") === col("c_custkey"))
         .join(broadcast(T(s, d, "nation")),
           col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name"))
-        .agg(
-          round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-            .as("revenue"),
-          count(lit(1)).as("n_rows"),
+        .agg(sum(units).as("units"), count(lit(1)).as("n_rows"),
           countDistinct(col("o_orderkey")).as("n_orders"))
+        .select(col("n_name"),
+          expr("cast((units + 50) div 100 as double) / 100").as("revenue"),
+          col("n_rows"), col("n_orders"))
         .orderBy(col("n_name"))
     },
-    Some("""SELECT n_name,
-           |  round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue,
+    Some("""-- nonneg-div(1): revenue units, prices >= 0 and discounts <= 1
+           |SELECT n_name,
+           |  CAST((sum(CAST(round(l_extendedprice * 100) AS BIGINT)
+           |    * (100 - CAST(round(l_discount * 100) AS BIGINT))) + 50) // 100
+           |    AS DOUBLE) / 100 AS revenue,
            |  count(*) AS n_rows,
            |  count(DISTINCT o_orderkey) AS n_orders
            |FROM lineitem

@@ -877,7 +877,7 @@ object QLayout {
     * a fixed-round synchronous score depends only on a bounded
     * in-neighborhood ([[graft.ops.Graph.pageRankIncremental]] has the
     * round-by-round invalidation argument). The v0 run retains its
-    * per-round score history ([[graft.ops.Graph.pageRankWithHistory]]);
+    * per-round score history ([[graft.ops.Graph.pageRankStateWithHistory]]);
     * after the merge only the dirty frontier recomputes, clean nodes'
     * scores are read back verbatim. Judged as the strongest claim
     * available: the maintained ranking hash-matches the oracle's DIRECT
@@ -895,7 +895,7 @@ object QLayout {
       val diff = Cdc.snapshotDiff(s, snap, 0, 1)
       Graph.pageRankIncremental(hist,
           Cdc.snapshotAt(s, snap, 1).select(col("src"), col("dst")),
-          diff.select(col("src"), col("dst")), 3, deg0 = Some(deg0))
+          diff.select(col("src"), col("dst")), 3, deg0)
         .orderBy(col("node"))
     },
     Some("""-- nonneg-div(6): ppm rank mass >= 0 throughout
@@ -956,7 +956,7 @@ object QLayout {
       val diff = Cdc.snapshotDiff(s, snap, 0, 1)
       Graph.labelPropagationIncremental(hist,
           Cdc.snapshotAt(s, snap, 1).select(col("src"), col("dst")),
-          diff.select(col("src"), col("dst")), 3, votes0 = Some(votes0))
+          diff.select(col("src"), col("dst")), 3, votes0)
         .orderBy(col("node"))
     },
     Some("""WITH e0 AS (

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Debug runner: print bpeLearn's merge table for an SF dir
   * (`Test/runMain graft.BpeLearnOnce [sfDir] [numMerges]`) — the source
   * of the frozen TextOps.defaultMerges artifact. */
@@ -9,13 +7,7 @@ object BpeLearnOnce {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val n = if (args.length > 1) args(1).toInt else 32
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.sessionBuilder(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val merges = ops.TextOps.bpeLearn(
       ops.Tables.table(spark, dir, "documents"), "text", n)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-19 scale measurement for INCREMENTAL PageRank maintenance
@@ -15,25 +15,12 @@ import org.apache.spark.sql.functions._
 object IncrStressProbe {
   def main(args: Array[String]): Unit = {
     val m = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.sessionBuilder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val shuffle = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val tm = e.taskMetrics
-          if (tm != null) {
-            shuffle.addAndGet(tm.shuffleWriteMetrics.bytesWritten); ()
-          }
-        }
-      })
-    // the GraphStressProbe skew shape: hub spokes + long chain + cliques
+    val metrics = new Bench.MetricsListener
+    spark.sparkContext.addSparkListener(metrics)
+    // the StressBench graph stages' skew shape: hub spokes + long chain
+    // + cliques
     def graph(): DataFrame = {
       val spokes = spark.range(1, m / 2)
         .selectExpr("cast(0 as long) as src", "id as dst")
@@ -46,13 +33,13 @@ object IncrStressProbe {
       spokes.unionAll(chain).unionAll(cliques)
     }
     def timed(tag: String)(f: => DataFrame): DataFrame = {
-      shuffle.set(0L)
+      metrics.reset()
       val t0 = System.nanoTime()
       val df = f
       val n = df.count()
-      Thread.sleep(500)
+      metrics.drain()
       println(f"[incr] $tag%-22s ${(System.nanoTime() - t0) / 1e9}%6.2f s" +
-        f"  shuffle=${shuffle.get / 1e6}%8.1f MB  rows=$n")
+        f"  shuffle=${metrics.shuffleBytes.get / 1e6}%8.1f MB  rows=$n")
       df
     }
     def sig(df: DataFrame): Array[org.apache.spark.sql.Row] =
@@ -83,17 +70,16 @@ object IncrStressProbe {
         // frame, so the maintain path patches degrees from the change
         // set instead of re-aggregating the merged edge list)
         val (hist, deg0) = {
-          shuffle.set(0L); val t0 = System.nanoTime()
+          metrics.reset(); val t0 = System.nanoTime()
           val hd = graft.ops.Graph.pageRankStateWithHistory(e0, 3)
           hd._1.last.count()
           hd._2.count()
           println(f"[incr] ${tag}_v0_history   ${(System.nanoTime() - t0) / 1e9}%6.2f s" +
-            f"  shuffle=${shuffle.get / 1e6}%8.1f MB")
+            f"  shuffle=${metrics.shuffleBytes.get / 1e6}%8.1f MB")
           hd
         }
         val maintained = timed(s"${tag}_maintain")(
-          graft.ops.Graph.pageRankIncremental(hist, e1, changed, 3,
-              deg0 = Some(deg0))
+          graft.ops.Graph.pageRankIncremental(hist, e1, changed, 3, deg0)
             .localCheckpoint())
         require(sig(maintained).toSeq == fullSig,
           s"$tag: maintained result != full recompute")
@@ -114,16 +100,16 @@ object IncrStressProbe {
         ("lpa_hub_adjacent", e0hub, hubChanged)).foreach {
       case (tag, e0, changed) =>
         val (hist, votes0) = {
-          shuffle.set(0L); val t0 = System.nanoTime()
+          metrics.reset(); val t0 = System.nanoTime()
           val hv = graft.ops.Graph.labelPropagationStateWithHistory(e0, 3)
           hv._1.last.count()
           println(f"[incr] ${tag}_v0_history   ${(System.nanoTime() - t0) / 1e9}%6.2f s" +
-            f"  shuffle=${shuffle.get / 1e6}%8.1f MB")
+            f"  shuffle=${metrics.shuffleBytes.get / 1e6}%8.1f MB")
           hv
         }
         val maintained = timed(s"${tag}_maintain")(
           graft.ops.Graph.labelPropagationIncremental(hist, e1, changed, 3,
-              votes0 = Some(votes0))
+              votes0)
             .localCheckpoint())
         require(sigL(maintained) == fullLpaSig,
           s"$tag: maintained labels != full recompute")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Generator for MetricsGateSpec's ceiling table: runs the coreBench
   * lanes at sf0.01 (fixtures warmed first, metrics from the second
   * pass) and prints the Scala source of the (shuffleBytes, rowsRead)
@@ -10,17 +8,9 @@ import org.apache.spark.sql.SparkSession
 object MetricsGateGen {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkSpec.builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val listener = new MetricsGate.Listener
+    val listener = new Bench.MetricsListener
     spark.sparkContext.addSparkListener(listener)
     println("    // generated by MetricsGateGen at sf0.01 — shuffle bytes, rows read")
     MetricsGate.lanes.foreach { name =>

@@ -1,46 +1,12 @@
 package graft
 
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-
-/** Shared plumbing for the plan-metrics regression gate (round 17, r16
-  * verdict item 5) — the lane list and the task-metric listener, used by
-  * both [[MetricsGateSpec]] (the failing test) and [[MetricsGateGen]]
-  * (the baseline generator). */
+/** The lane list of the plan-metrics regression gate (round 17, r16
+  * verdict item 5), shared by [[MetricsGateSpec]] (the failing test) and
+  * [[MetricsGateGen]] (the baseline generator); both read the counters
+  * of [[Bench.MetricsListener]]. */
 object MetricsGate {
   /** Bench.coreBench — the 30 lanes the judge plan-audits every round. */
   def lanes: Seq[String] = Bench.coreBench
-
-  final class Listener extends org.apache.spark.scheduler.SparkListener {
-    val shuffleBytes = new AtomicLong(0L)
-    val rowsRead = new AtomicLong(0L)
-    private val started = new AtomicInteger(0)
-    private val ended = new AtomicInteger(0)
-    override def onJobStart(
-        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      started.incrementAndGet(); ()
-    }
-    override def onJobEnd(
-        e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-      ended.incrementAndGet(); ()
-    }
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        rowsRead.addAndGet(m.inputMetrics.recordsRead)
-        ()
-      }
-    }
-    def reset(): Unit = {
-      shuffleBytes.set(0L); rowsRead.set(0L); started.set(0); ended.set(0)
-    }
-    def drain(): Unit = {
-      val deadline = System.nanoTime() + 2_000_000_000L
-      while ((started.get() == 0 || ended.get() < started.get()) &&
-        System.nanoTime() < deadline) Thread.sleep(10)
-    }
-  }
 }
 
 /** The PLAN-METRICS regression gate (round 17, r16 verdict item 5).
@@ -109,7 +75,7 @@ class MetricsGateSpec extends SparkSpec {
 
   test("coreBench plan metrics stay under the pinned ceilings at sf0.01") {
     assume(new java.io.File("/root/testdata/sf0.01").isDirectory)
-    val listener = new MetricsGate.Listener
+    val listener = new Bench.MetricsListener
     spark.sparkContext.addSparkListener(listener)
     try {
       val failures = scala.collection.mutable.ArrayBuffer.empty[String]

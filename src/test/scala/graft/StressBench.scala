@@ -31,15 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object StressBench {
 
-  private final class Listener extends org.apache.spark.scheduler.SparkListener {
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) { shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten); () }
-    }
-  }
-
   /** k-word deterministic pseudo-text: md5-derived 6-hex-char words. */
   private def words(seed: String, k: Int): String =
     s"array_join(transform(sequence(1, $k), j -> " +
@@ -86,29 +77,22 @@ object StressBench {
     }
     val out = if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("graft_stress").toString
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.sessionBuilder(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     corpus(spark, n).write.mode("overwrite")
       .parquet(s"$out/documents.parquet")
     val docs = spark.read.parquet(s"$out/documents.parquet")
 
-    val listener = new Listener
+    val listener = new Bench.MetricsListener
     spark.sparkContext.addSparkListener(listener)
     val results = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Long, Long)]
     def stage(name: String)(df: => DataFrame): Unit = {
-      listener.shuffleBytes.set(0L)
+      listener.reset()
       val t0 = System.nanoTime()
       val cnt = df.count()
       val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // listener bus drain
+      listener.drain()
       results(name) = (dt, cnt, listener.shuffleBytes.get())
       System.err.println(f"[stress] $name%-16s ${dt}%8.2f s  rows=$cnt  " +
         f"shuffle=${listener.shuffleBytes.get() / 1e6}%.1f MB")

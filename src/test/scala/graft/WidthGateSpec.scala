@@ -2,9 +2,9 @@ package graft
 
 import scala.collection.concurrent.TrieMap
 
-/** The FAN-OUT WIDTH gate (round 19, r18 verdict item 1): StageAudit
-  * found the coalesce-before-expansion plan class by manual sweep in
-  * r18; this spec makes the next variant a failing test.
+/** The FAN-OUT WIDTH gate (round 19, r18 verdict item 1): a manual
+  * sweep of all bench lanes found the coalesce-before-expansion plan
+  * class in r18 (BASELINE.md "Width guards"); this spec makes the next variant a failing test.
   *
   * The property pinned: for every known fan-out lane, the lane's
   * heaviest stage — by task CPU and, independently, by shuffle records
@@ -18,8 +18,8 @@ import scala.collection.concurrent.TrieMap
   * The gate is proven RED, in CI, against the deliberate pessimization:
   * the -Dgraft.fanout.disable seam strips the numbered repartition and
   * the same detector must then FAIL for the lanes whose width collapses
-  * at sf0.01 (linkpred, betweenness, basket_rules — measured by
-  * StageWidthProbe; lpa and span_pairs inherit width from their
+  * at sf0.01 (linkpred, betweenness, basket_rules — BASELINE.md
+  * "Retired probe mains", StageWidthProbe; lpa and span_pairs inherit width from their
   * checkpoint's partition count at this scale, so their red case only
   * manifests at larger SF and they are pinned in the green direction
   * only). CPU time, not wall: host load cannot flip the verdict. */

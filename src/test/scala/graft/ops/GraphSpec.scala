@@ -259,8 +259,9 @@ class GraphSpec extends SparkSpec {
     // the round-20 LPA carries its static frame through Fanout.pinned;
     // below the derived threshold every unit test exercises only the
     // checkpoint branch, so force the PIN branch (threshold 0) and
-    // assert label equality — the same global-seam discipline as
-    // PinLaneAb, scoped with try/finally. StressBench's lpa_1m is the
+    // assert label equality — the same global-seam discipline as the
+    // round-18 pin A/B (BASELINE.md "The static-frame pin, size-gated"),
+    // scoped with try/finally. StressBench's lpa_1m is the
     // at-scale point; this pins branch equivalence in CI.
     val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L),
       (10L, 11L), (11L, 12L), (10L, 12L), (20L, 21L)).toDF("src", "dst")

@@ -17,20 +17,14 @@ class LpaIncrSpec extends SparkSpec {
     val (hist, votes0) = Graph.labelPropagationStateWithHistory(
       e0.toSeq.toDF("src", "dst"), rounds)
     val changed = ((e1 -- e0) ++ (e0 -- e1)).toSeq.toDF("src", "dst")
-    val got = Graph.labelPropagationIncremental(hist,
-        e1.toSeq.toDF("src", "dst"), changed, rounds)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val want = Graph.labelPropagation(e1.toSeq.toDF("src", "dst"), rounds)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(got == want,
-      s"incremental != full recompute for e0=$e0 e1=$e1\n got: $got\nwant: $want")
     // the PATCHED-votes path (votes0 retained, v1 votes derived as an
-    // anti-patch + touched-pair dedup) must land on the same labels —
-    // every case covers it: pairs vanishing, pairs appearing, pairs
-    // changed in one direction only
+    // anti-patch + touched-pair dedup) must land on the full-recompute
+    // labels — every case covers it: pairs vanishing, pairs appearing,
+    // pairs changed in one direction only
     val gotPatched = Graph.labelPropagationIncremental(hist,
-        e1.toSeq.toDF("src", "dst"), changed, rounds,
-        votes0 = Some(votes0))
+        e1.toSeq.toDF("src", "dst"), changed, rounds, votes0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(gotPatched == want,
       s"patched-votes path != full recompute for e0=$e0 e1=$e1\n" +

@@ -20,20 +20,15 @@ class PageRankIncrSpec extends SparkSpec {
     val (hist, deg0) = Graph.pageRankStateWithHistory(
       e0.toSeq.toDF("src", "dst"), iters)
     val changed = ((e1 -- e0) ++ (e0 -- e1)).toSeq.toDF("src", "dst")
-    val got = Graph.pageRankIncremental(hist,
-        e1.toSeq.toDF("src", "dst"), changed, iters)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val want = Graph.pageRank(e1.toSeq.toDF("src", "dst"), iters)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(got == want,
-      s"incremental != full recompute for e0=$e0 e1=$e1\n got: $got\nwant: $want")
-    // round 20: the MAINTAINED-degree path (deg0 retained, patched
-    // from the change set) must land on the same scores — every case
+    // the MAINTAINED-degree path (deg0 retained, patched from the
+    // change set) must land on the full-recompute scores — every case
     // in this sweep covers it: sources losing all edges (no recount
     // row, v0 row anti-dropped), brand-new sources (recount in),
     // untouched sources (v0 row carried)
     val gotDeg = Graph.pageRankIncremental(hist,
-        e1.toSeq.toDF("src", "dst"), changed, iters, deg0 = Some(deg0))
+        e1.toSeq.toDF("src", "dst"), changed, iters, deg0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(gotDeg == want,
       s"maintained-degree path != full recompute for e0=$e0 e1=$e1\n" +
