@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Bench.esc
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -247,27 +248,17 @@ object Cdc {
       case _ => val x = v.toString; x >= lo && x <= hi
     }
 
-  private def jsonEsc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   private def manifestJson(m: Manifest): String = {
     val statsJson = m.stats.toSeq.sortBy(_._1).map { case (b, st) =>
       def arr(xs: Seq[Option[String]]) = xs
-        .map(_.map(s => "\"" + jsonEsc(s) + "\"").getOrElse("null"))
+        .map(_.map(s => "\"" + esc(s) + "\"").getOrElse("null"))
         .mkString("[", ",", "]")
       s""""$b":{"rows":${st.rows},"min":${arr(st.keyMin)},"max":${arr(st.keyMax)}}"""
     }.mkString(""""stats":{""", ",", "}")
     s"""{"nBuckets":${m.nBuckets},""" +
-      s""""commit":"${jsonEsc(m.commitId)}",""" +
-      s""""schema":"${jsonEsc(m.schemaDdl)}",""" +
-      m.keys.map(k => s""""${jsonEsc(k)}"""")
+      s""""commit":"${esc(m.commitId)}",""" +
+      s""""schema":"${esc(m.schemaDdl)}",""" +
+      m.keys.map(k => s""""${esc(k)}"""")
         .mkString(""""keys":[""", ",", "],") +
       m.buckets.toSeq.sortBy(_._1)
         .map { case (b, v) => s""""$b":$v""" }

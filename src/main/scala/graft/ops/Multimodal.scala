@@ -22,13 +22,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Metadata struct carried next to every media payload. */
-  val metaSchema: StructType = StructType(Seq(
-    StructField("byte_len", IntegerType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("n_frames", IntegerType, nullable = false)))
-
   /** Attach a binary payload + metadata struct to a text table — the test
     * stand-in for reading real media files (binaryFile source in prod). */
   def withPayload(docs: DataFrame, textCol: String, idCol: String): DataFrame =

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
+import graft.Bench.esc
 import graft.sources.MessageSink
 
 /** S8 — service registry / heartbeat, ops-plane (not a dataflow operator).
@@ -15,9 +16,9 @@ final class Heartbeat(sink: MessageSink, appName: String,
     instanceId: String = java.util.UUID.randomUUID().toString)
     extends StreamingQueryListener {
 
-  private def payload(state: String): String = {
+  private[streaming] def payload(state: String): String = {
     val host = java.net.InetAddress.getLocalHost
-    s"""{"hostname":"${host.getHostName}","ipaddr":"${host.getHostAddress}","instance_id":"$instanceId","state":"$state"}"""
+    s"""{"hostname":"${esc(host.getHostName)}","ipaddr":"${esc(host.getHostAddress)}","instance_id":"${esc(instanceId)}","state":"$state"}"""
   }
 
   override def onQueryStarted(e: QueryStartedEvent): Unit =

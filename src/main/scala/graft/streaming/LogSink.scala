@@ -70,21 +70,6 @@ final class RotatingJsonlLogger(dir: String, base: String = "graft",
   }
 }
 
-object RotatingJsonlLogger {
-  /** Minimal JSON string escaping for the fields we emit (names,
-    * exception messages): backslash, quote, control chars. */
-  private[streaming] def esc(s: String): String = {
-    val b = new StringBuilder(s.length)
-    s.foreach {
-      case '\\' => b.append("\\\\")
-      case '"'  => b.append("\\\"")
-      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-      case c    => b.append(c)
-    }
-    b.toString
-  }
-}
-
 /** Wires query lifecycle + per-batch progress into the rotating log —
   * register via `spark.streams.addListener(new RotatingLogListener(l))`.
   * Event volume is one line per micro-batch per query (plus start/stop),
@@ -92,7 +77,7 @@ object RotatingJsonlLogger {
   * driver-local service log legitimate at 100 TB. */
 final class RotatingLogListener(logger: RotatingJsonlLogger)
     extends StreamingQueryListener {
-  import RotatingJsonlLogger.esc
+  import graft.Bench.esc
 
   override def onQueryStarted(e: QueryStartedEvent): Unit =
     logger.appendLine(s"""{"event":"started","id":"${e.id}",""" +

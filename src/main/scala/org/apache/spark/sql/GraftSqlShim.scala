@@ -1,11 +1,13 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Minimal access shim for `private[sql]` Dataset construction from a
-  * LogicalPlan — the standard pattern third-party Spark extension
-  * libraries use to materialize custom logical operators (public Spark
-  * API only, accessed at package scope; no internals are modified). */
+/** Minimal access shim for Spark members that are `private[sql]` or
+  * `private[spark]` — Dataset construction from a LogicalPlan, the
+  * Column <-> Expression bridge and the listener bus — the standard
+  * pattern third-party Spark extension libraries use (accessed at package
+  * scope; no internals are modified). */
 object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
@@ -16,4 +18,10 @@ object GraftSqlShim {
     classic.ExpressionUtils.column(e)
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** Returns once the listener bus has delivered every event posted
+    * before the call, to every listener (SparkListeners and, through
+    * their bus queue, StreamingQueryListeners); throws a TimeoutException
+    * if that takes over 10 s. The bus is `private[spark]`. */
+  def awaitListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

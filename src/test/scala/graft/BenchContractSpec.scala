@@ -41,7 +41,10 @@ class BenchContractSpec extends AnyFunSuite {
     val withFailures = results.map { case (n, t) =>
       n -> (if (failing.contains(n)) -1.0 else t)
     }
-    val metrics = names.map(n => n -> (123456789L, 987654321L, 1234567890L)).toMap
+    val metrics = names.map(n => n -> Seq("shuffle_bytes" -> 123456789L,
+      "rows_read" -> 987654321L, "bytes_read" -> 1234567890L, "jobs" -> 12L,
+      "sql_execs" -> 3L, "task_ms" -> 4567L, "wall_ms" -> 1235L,
+      "job_ms" -> 1000L, "plan_ms" -> 200L, "glue_ms" -> 35L)).toMap
     val (full, compact) =
       Bench.render(withFailures, metrics, errors, "/root/testdata/sf0.1")
 

@@ -17,8 +17,7 @@ object IncrStressProbe {
     val m = args.headOption.map(_.toLong).getOrElse(1000000L)
     val spark = SparkEntry.sessionBuilder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val metrics = new Bench.MetricsListener
-    spark.sparkContext.addSparkListener(metrics)
+    val rec = new RunRecorder(spark.sparkContext)
     // the StressBench graph stages' skew shape: hub spokes + long chain
     // + cliques
     def graph(): DataFrame = {
@@ -32,15 +31,18 @@ object IncrStressProbe {
           s"explode(sequence(id + 1, least((id div 10) * 10 + 9, ${m - 1}))) as dst")
       spokes.unionAll(chain).unionAll(cliques)
     }
-    def timed(tag: String)(f: => DataFrame): DataFrame = {
-      metrics.reset()
+    /** Builds `f` and counts its rows, and prints the wall and shuffle
+      * volume of both. */
+    def timed[A](tag: String)(f: => A)(rows: A => Long): A = {
+      rec.reset()
       val t0 = System.nanoTime()
-      val df = f
-      val n = df.count()
-      metrics.drain()
-      println(f"[incr] $tag%-22s ${(System.nanoTime() - t0) / 1e9}%6.2f s" +
-        f"  shuffle=${metrics.shuffleBytes.get / 1e6}%8.1f MB  rows=$n")
-      df
+      val a = f
+      val n = rows(a)
+      val dt = (System.nanoTime() - t0) / 1e9
+      rec.flush()
+      println(f"[incr] $tag%-22s $dt%6.2f s" +
+        f"  shuffle=${rec.sum(_.shuffleBytes) / 1e6}%8.1f MB  rows=$n")
+      a
     }
     def sig(df: DataFrame): Array[org.apache.spark.sql.Row] =
       df.select(md5(concat_ws(":", col("node"), col("score"))).as("h"))
@@ -59,7 +61,7 @@ object IncrStressProbe {
     val e0hub = e1.except(hubChanged).localCheckpoint()
 
     val full = timed("full_recompute")(
-      graft.ops.Graph.pageRank(e1, 3).localCheckpoint())
+      graft.ops.Graph.pageRank(e1, 3).localCheckpoint())(_.count())
     val fullSig = sig(full).toSeq
 
     Seq(("chain_local", e0local, localChanged),
@@ -69,18 +71,12 @@ object IncrStressProbe {
         // (round 20: the retained state now includes the v0 degree
         // frame, so the maintain path patches degrees from the change
         // set instead of re-aggregating the merged edge list)
-        val (hist, deg0) = {
-          metrics.reset(); val t0 = System.nanoTime()
-          val hd = graft.ops.Graph.pageRankStateWithHistory(e0, 3)
-          hd._1.last.count()
-          hd._2.count()
-          println(f"[incr] ${tag}_v0_history   ${(System.nanoTime() - t0) / 1e9}%6.2f s" +
-            f"  shuffle=${metrics.shuffleBytes.get / 1e6}%8.1f MB")
-          hd
-        }
+        val (hist, deg0) = timed(s"${tag}_v0_history")(
+          graft.ops.Graph.pageRankStateWithHistory(e0, 3))(
+          hd => hd._1.last.count() + hd._2.count())
         val maintained = timed(s"${tag}_maintain")(
           graft.ops.Graph.pageRankIncremental(hist, e1, changed, 3, deg0)
-            .localCheckpoint())
+            .localCheckpoint())(_.count())
         require(sig(maintained).toSeq == fullSig,
           s"$tag: maintained result != full recompute")
         println(s"[incr] ${tag}_EQUAL full recompute: true")
@@ -94,23 +90,18 @@ object IncrStressProbe {
         .agg(count(lit(1)), sum(conv(substring(col("h"), 1, 8), 16, 10)
           .cast("long"))).collect().toSeq
     val fullLpa = timed("lpa_full_recompute")(
-      graft.ops.Graph.labelPropagation(e1, 3).localCheckpoint())
+      graft.ops.Graph.labelPropagation(e1, 3).localCheckpoint())(_.count())
     val fullLpaSig = sigL(fullLpa)
     Seq(("lpa_chain_local", e0local, localChanged),
         ("lpa_hub_adjacent", e0hub, hubChanged)).foreach {
       case (tag, e0, changed) =>
-        val (hist, votes0) = {
-          metrics.reset(); val t0 = System.nanoTime()
-          val hv = graft.ops.Graph.labelPropagationStateWithHistory(e0, 3)
-          hv._1.last.count()
-          println(f"[incr] ${tag}_v0_history   ${(System.nanoTime() - t0) / 1e9}%6.2f s" +
-            f"  shuffle=${metrics.shuffleBytes.get / 1e6}%8.1f MB")
-          hv
-        }
+        val (hist, votes0) = timed(s"${tag}_v0_history")(
+          graft.ops.Graph.labelPropagationStateWithHistory(e0, 3))(
+          _._1.last.count())
         val maintained = timed(s"${tag}_maintain")(
           graft.ops.Graph.labelPropagationIncremental(hist, e1, changed, 3,
               votes0)
-            .localCheckpoint())
+            .localCheckpoint())(_.count())
         require(sigL(maintained) == fullLpaSig,
           s"$tag: maintained labels != full recompute")
         println(s"[incr] ${tag}_EQUAL full recompute: true")

@@ -10,16 +10,11 @@ object MetricsGateGen {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val spark = SparkSpec.builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val listener = new Bench.MetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    val rec = new RunRecorder(spark.sparkContext)
     println("    // generated by MetricsGateGen at sf0.01 — shuffle bytes, rows read")
     MetricsGate.lanes.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      fn(spark, dir).write.format("noop").mode("overwrite").save() // warm
-      listener.reset()
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-      listener.drain()
-      println(s"""    "$name" -> (${listener.shuffleBytes.get()}L, ${listener.rowsRead.get()}L),""")
+      val (sb, rr) = MetricsGate.measure(rec, spark, name, dir)
+      println(s"""    "$name" -> (${sb}L, ${rr}L),""")
     }
     spark.stop()
   }

@@ -1,12 +1,27 @@
 package graft
 
+import scala.util.Using
+
 /** The lane list of the plan-metrics regression gate (round 17, r16
   * verdict item 5), shared by [[MetricsGateSpec]] (the failing test) and
-  * [[MetricsGateGen]] (the baseline generator); both read the counters
-  * of [[Bench.MetricsListener]]. */
+  * [[MetricsGateGen]] (the baseline generator); both read the task
+  * totals of a [[RunRecorder]]. */
 object MetricsGate {
   /** Bench.coreBench — the 30 lanes the judge plan-audits every round. */
   def lanes: Seq[String] = Bench.coreBench
+
+  /** (shuffle bytes, rows read) of a lane's second run: the first, untimed,
+    * builds oncePerDir fixtures and warms JIT and codegen. */
+  def measure(rec: RunRecorder, spark: org.apache.spark.sql.SparkSession,
+      name: String, dir: String): (Long, Long) = {
+    def run(): Unit =
+      SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
+    run()
+    rec.reset()
+    run()
+    rec.flush()
+    (rec.sum(_.shuffleBytes), rec.sum(_.inputRows))
+  }
 }
 
 /** The PLAN-METRICS regression gate (round 17, r16 verdict item 5).
@@ -75,19 +90,11 @@ class MetricsGateSpec extends SparkSpec {
 
   test("coreBench plan metrics stay under the pinned ceilings at sf0.01") {
     assume(new java.io.File("/root/testdata/sf0.01").isDirectory)
-    val listener = new Bench.MetricsListener
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    Using.resource(new RunRecorder(spark.sparkContext)) { rec =>
       val failures = scala.collection.mutable.ArrayBuffer.empty[String]
       MetricsGate.lanes.foreach { name =>
-        val fn = SparkEntry.queries(name)
-        def run(): Unit = fn(spark, "/root/testdata/sf0.01")
-          .write.format("noop").mode("overwrite").save()
-        run() // untimed: builds oncePerDir fixtures, JIT, codegen
-        listener.reset()
-        run()
-        listener.drain()
-        val (sb, rr) = (listener.shuffleBytes.get(), listener.rowsRead.get())
+        val (sb, rr) =
+          MetricsGate.measure(rec, spark, name, "/root/testdata/sf0.01")
         baseline.get(name).foreach { case (b, r) =>
           val sCeil = (b * 3) / 2 + (16L << 10)
           val rCeil = (r * 13) / 10 + 10000L
@@ -103,6 +110,6 @@ class MetricsGateSpec extends SparkSpec {
       assert(missing.isEmpty,
         s"core lanes without a pinned baseline: $missing — run MetricsGateGen")
       assert(failures.isEmpty, failures.mkString("\n"))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 }

@@ -84,18 +84,18 @@ object StressBench {
       .parquet(s"$out/documents.parquet")
     val docs = spark.read.parquet(s"$out/documents.parquet")
 
-    val listener = new Bench.MetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    val rec = new RunRecorder(spark.sparkContext)
     val results = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Long, Long)]
     def stage(name: String)(df: => DataFrame): Unit = {
-      listener.reset()
+      rec.reset()
       val t0 = System.nanoTime()
       val cnt = df.count()
       val dt = (System.nanoTime() - t0) / 1e9
-      listener.drain()
-      results(name) = (dt, cnt, listener.shuffleBytes.get())
+      rec.flush()
+      val shuffle = rec.sum(_.shuffleBytes)
+      results(name) = (dt, cnt, shuffle)
       System.err.println(f"[stress] $name%-16s ${dt}%8.2f s  rows=$cnt  " +
-        f"shuffle=${listener.shuffleBytes.get() / 1e6}%.1f MB")
+        f"shuffle=${shuffle / 1e6}%.1f MB")
     }
 
     stage("lsh_capped")(ops.Dedup.lshCandidates(

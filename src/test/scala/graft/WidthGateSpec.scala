@@ -1,6 +1,6 @@
 package graft
 
-import scala.collection.concurrent.TrieMap
+import scala.util.Using
 
 /** The FAN-OUT WIDTH gate (round 19, r18 verdict item 1): a manual
   * sweep of all bench lanes found the coalesce-before-expansion plan
@@ -30,50 +30,24 @@ class WidthGateSpec extends SparkSpec {
   private val collapseLanes = Seq("x10_linkpred", "x10_betweenness",
     "x12_basket_rules")
 
-  final class StageListener
-      extends org.apache.spark.scheduler.SparkListener {
-    // stageId -> (tasks, sumCpuNs, recordsWritten)
-    val stages = TrieMap.empty[Int, (Int, Long, Long)]
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        stages.updateWith(e.stageId) {
-          case Some((n, s, r)) => Some((n + 1, s + m.executorCpuTime,
-            r + m.shuffleWriteMetrics.recordsWritten))
-          case None => Some((1, m.executorCpuTime,
-            m.shuffleWriteMetrics.recordsWritten))
-        }
-        ()
-      }
-    }
-  }
-
   /** (width of hottest-CPU stage, width of max-records-written stage). */
-  private def heavyStageWidths(name: String): (Int, Int) = {
-    val l = new StageListener
-    spark.sparkContext.addSparkListener(l)
-    try {
+  private def heavyStageWidths(name: String): (Int, Int) =
+    Using.resource(new RunRecorder(spark.sparkContext)) { rec =>
       SparkEntry.queries(name)(spark, "/root/testdata/sf0.01")
         .write.format("noop").mode("overwrite").save()
-      // listener bus is async — wait until the tallies stop moving
-      var last = Map.empty[Int, (Int, Long, Long)]
-      val deadline = System.nanoTime() + 5_000_000_000L
-      while (l.stages.toMap != last && System.nanoTime() < deadline) {
-        last = l.stages.toMap; Thread.sleep(150)
-      }
-      val byCpu = l.stages.maxBy(_._2._2)
+      rec.flush()
+      val stages = rec.stages
+      val byCpu = stages.values.maxBy(_.cpuNs)
       // the record detector only ranks CPU-SIGNIFICANT stages (>= 30%
       // of the hottest): a parquet scan's map side legitimately runs at
       // the file's split count (1 at sf0.01) while writing the numbered
       // exchange's full record volume — narrow AND record-heavy but
       // cheap, the opposite of the serialized-expansion signature this
       // gate hunts (narrow, record-heavy AND hot)
-      val significant = l.stages.filter(_._2._2 * 10 >= byCpu._2._2 * 3)
-      val byRec = significant.maxBy(_._2._3)
-      (byCpu._2._1, byRec._2._1)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
+      val significant = stages.values.filter(_.cpuNs * 10 >= byCpu.cpuNs * 3)
+      val byRec = significant.maxBy(_.shuffleRecords)
+      (byCpu.tasks, byRec.tasks)
+    }
 
   test("every fan-out lane's heaviest stage (by CPU and by shuffle " +
       "records) runs at full shuffle parallelism") {

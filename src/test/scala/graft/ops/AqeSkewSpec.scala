@@ -1,11 +1,12 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{RunRecorder, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
+import scala.util.Using
 
 /** X6c — Spark's OWN skew-join rewrite (AQE OptimizeSkewedJoin) judged
   * as a first-class lever next to the manual salt (x6_salted_join):
@@ -145,27 +146,16 @@ class AqeSkewSpec extends SparkSpec {
     // contrast point: skew-join AND coalescing off, 4 reducers — the
     // max join-stage task input must dwarf the median (per-task shuffle
     // read rows; tasks under 1k rows are other stages' and filtered)
-    val rows = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null && m.shuffleReadMetrics.recordsRead >= 1000) {
-          rows.add(m.shuffleReadMetrics.recordsRead); ()
-        }
-      }
-    }
-    withSkewConfs {
+    val sizes = withSkewConfs {
       spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
       spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      spark.sparkContext.addSparkListener(l)
-      try {
+      Using.resource(new RunRecorder(spark.sparkContext)) { rec =>
         aqeShape.collect()
-        Thread.sleep(500) // listener bus drain
-      } finally spark.sparkContext.removeSparkListener(l)
+        rec.flush()
+        rec.stages.values.flatMap(_.taskShuffleRecordsRead)
+          .filter(_ >= 1000).toSeq.sorted
+      }
     }
-    val sizes = rows.toArray(Array.empty[java.lang.Long]).map(_.toLong)
-      .sorted
     assert(sizes.length >= 2, s"expected several join-stage tasks: $sizes")
     val max = sizes.last
     val med = sizes(sizes.length / 2)

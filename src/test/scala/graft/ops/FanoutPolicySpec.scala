@@ -1,7 +1,8 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{RunRecorder, SparkSpec}
 import org.apache.spark.sql.functions._
+import scala.util.Using
 
 /** Round 18: Fanout.pinned is SIZE-GATED — small static frames keep the
   * checkpoint form (AQE-coalesced per-round exchanges beat the pin's
@@ -94,33 +95,17 @@ class FanoutPolicySpec extends SparkSpec {
 
   test("the size decision runs zero extra jobs beyond the eager " +
       "checkpoint's own materialization") {
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      // deterministic drain: the listener bus is async, so poll until
-      // the count is stable rather than sleeping a fixed interval
-      def drained(): Int = {
-        val deadline = System.nanoTime() + 5_000_000_000L
-        var last = -1
-        while (System.nanoTime() < deadline && counter.get() != last) {
-          last = counter.get(); Thread.sleep(150)
-        }
-        counter.get()
-      }
+    Using.resource(new RunRecorder(spark.sparkContext)) { rec =>
+      def drained(): Int = { rec.flush(); rec.jobs.size }
       // baseline: an eager localCheckpoint alone
       edges.localCheckpoint()
       val base = drained()
-      counter.set(0)
+      rec.reset()
       Fanout.pinned(edges.toDF(), "src")
-      assert(drained() == base,
-        s"pinned ran ${counter.get()} jobs vs checkpoint's $base — " +
+      val n = drained()
+      assert(n == base,
+        s"pinned ran $n jobs vs checkpoint's $base — " +
           "the size decision must be job-free")
-    } finally spark.sparkContext.removeSparkListener(l)
+    }
   }
 }

@@ -1,7 +1,8 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{RunRecorder, SparkSpec}
 import org.apache.spark.sql.functions._
+import scala.util.Using
 
 class TextBpeSpec extends SparkSpec {
   import spark.implicits._
@@ -79,25 +80,15 @@ class TextBpeSpec extends SparkSpec {
   test("X4k bpeLearn Spark job count is INDEPENDENT of numMerges (r15: " +
       "one dict aggregation, merge loop driver-side)") {
     val docs = Tables.table(spark, "/root/testdata/sf0.001", "documents")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    def jobCount(numMerges: Int): Int = {
-      spark.sparkContext.addSparkListener(l)
-      try {
-        jobs.set(0)
+    val (j2, j16) = Using.resource(new RunRecorder(spark.sparkContext)) { rec =>
+      def jobCount(numMerges: Int): Int = {
+        rec.reset()
         TextOps.bpeLearn(docs, "text", numMerges)
-        // listener bus is async: give late job-start events time to land
-        Thread.sleep(500)
-        jobs.get()
-      } finally spark.sparkContext.removeSparkListener(l)
+        rec.flush()
+        rec.jobs.size
+      }
+      (jobCount(2), jobCount(16))
     }
-    val j2 = jobCount(2)
-    val j16 = jobCount(16)
     assert(j2 == j16,
       s"job count must not grow with numMerges: $j2 (2 merges) vs " +
         s"$j16 (16 merges)")

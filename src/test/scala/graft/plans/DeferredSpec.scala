@@ -1,9 +1,9 @@
 package graft.plans
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.SparkSpec
+import graft.{RunRecorder, SparkSpec}
+import scala.util.Using
 
 /** Pins the round-17 AQE-eager-checkpoint fence (r16 verdict item 6):
   * composing an iterative operator through [[Deferred.frame]] runs ZERO
@@ -11,21 +11,12 @@ import graft.SparkSpec
   * construction (the documented AQE + localCheckpoint exposure). */
 class DeferredSpec extends SparkSpec {
 
-  private def countJobs[A](f: => A): (A, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
+  private def countJobs[A](f: => A): (A, Int) =
+    Using.resource(new RunRecorder(spark.sparkContext)) { rec =>
       val r = f
-      // the listener bus is async — give it a beat before reading
-      Thread.sleep(400)
-      (r, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
+      rec.flush()
+      (r, rec.jobs.size)
+    }
 
   private def edges = {
     import spark.implicits._

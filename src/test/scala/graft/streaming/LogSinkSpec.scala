@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.apache.spark.sql.GraftSqlShim
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.nio.file.Files
 
@@ -45,11 +46,7 @@ class LogSinkSpec extends SparkSpec {
       val q = in.toDF().writeStream.format("noop").start()
       q.processAllAvailable()
       q.stop()
-      // listener events dispatch async; wait for the terminated line
-      val deadline = System.currentTimeMillis() + 15000
-      while (System.currentTimeMillis() < deadline &&
-        !log.retainedLines.exists(_.contains("\"terminated\"")))
-        Thread.sleep(50)
+      GraftSqlShim.awaitListeners(spark.sparkContext)
       val got = log.retainedLines
       assert(got.exists(_.contains("\"event\":\"started\"")))
       assert(got.exists(l => l.contains("\"event\":\"progress\"") &&
@@ -60,6 +57,6 @@ class LogSinkSpec extends SparkSpec {
   }
 
   test("S12 escaping keeps quotes/backslashes/control chars valid JSON") {
-    assert(RotatingJsonlLogger.esc("a\"b\\c\nd") == "a\\\"b\\\\c\\u000ad")
+    assert(graft.Bench.esc("a\"b\\c\nd") == "a\\\"b\\\\c\\nd")
   }
 }

@@ -1,13 +1,14 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{RunRecorder, SparkSpec}
 import graft.ops.Tables
 import graft.sources.{InMemoryQueues, InMemorySink, LoopbackWsServer, TickChannels, WsTickClient}
+import org.apache.spark.sql.GraftSqlShim
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import java.sql.Timestamp
-import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -353,28 +354,13 @@ class StreamingSpec extends SparkSpec {
       "publish, with no dim broadcast beside it") {
     TickChannels.clear()
     InMemoryQueues.clear()
-    // streaming jobs carry their query and batch ids as local properties;
-    // a marker job run afterwards flushes the listener bus (in order)
-    val jobsByBatch = new java.util.concurrent.ConcurrentHashMap[String, Int]()
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    @volatile var queryId = ""
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).foreach { p =>
-          if (p.getProperty("sql.streaming.queryId") == queryId)
-            jobsByBatch.merge(p.getProperty("streaming.sql.batchId"), 1, _ + _)
-          if (p.getProperty("graft.test.marker") != null) flushed.countDown()
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val frame = Array(10.0, 0, 12.0, 0, 0, 0, 11.0, 100.0, 13.0, 9.0)
-    try {
+    // streaming jobs carry their query and batch ids as local properties
+    Using.resource(new RunRecorder(spark.sparkContext)) { rec =>
+      val frame = Array(10.0, 0, 12.0, 0, 0, 0, 11.0, 100.0, 13.0, 9.0)
       val q = TickPipeline.publishStream(TickPipeline.fromWss(spark)(
         spark.readStream.format("graft.sources.TickStreamSource")
           .option("channel", "c6").load()),
         new InMemorySink, "onejob", Trigger.ProcessingTime(0L))
-      queryId = q.id.toString
       (0 until 3).foreach { b =>
         TickChannels.append("c6", ("btfx", if (b == 1) "nosuchpair" else "btceur",
           frame, 1704067200000000L + b))
@@ -383,15 +369,15 @@ class StreamingSpec extends SparkSpec {
       q.stop()
       val batches = q.recentProgress.filter(_.numInputRows > 0)
         .map(_.batchId.toString).toSet
-      spark.sparkContext.setLocalProperty("graft.test.marker", "1")
-      try spark.sparkContext.parallelize(Seq(1)).count()
-      finally spark.sparkContext.setLocalProperty("graft.test.marker", null)
-      assert(flushed.await(10, java.util.concurrent.TimeUnit.SECONDS))
+      rec.flush()
+      val jobsByBatch = rec.jobs.values.map(_.props)
+        .filter(_.get("sql.streaming.queryId").contains(q.id.toString))
+        .groupMapReduce(_.getOrElse("streaming.sql.batchId", ""))(_ => 1)(_ + _)
       assert(InMemoryQueues.drain("onejob").size == 3)
-      assert(batches.nonEmpty && jobsByBatch.keySet.asScala == batches,
+      assert(batches.nonEmpty && jobsByBatch.keySet == batches,
         s"batches $batches, jobs by batch $jobsByBatch")
-      assert(jobsByBatch.values.asScala.forall(_ == 1), jobsByBatch.toString)
-    } finally spark.sparkContext.removeSparkListener(listener)
+      assert(jobsByBatch.values.forall(_ == 1), jobsByBatch.toString)
+    }
   }
 
   test("S5 commit trims the channel: retained frames stay bounded across " +
@@ -662,15 +648,21 @@ class StreamingSpec extends SparkSpec {
       val q = in.toDF().writeStream.format("memory").queryName("hb").start()
       in.addData(1); q.processAllAvailable(); q.stop()
       q.awaitTermination(10000)
-      // listener events are async; poll briefly
-      val deadline = System.currentTimeMillis() + 10000
-      var msgs = Seq.empty[String]
-      while (msgs.isEmpty && System.currentTimeMillis() < deadline) {
-        Thread.sleep(200)
-        msgs = InMemoryQueues.drain("services/downloader")
-      }
+      GraftSqlShim.awaitListeners(spark.sparkContext)
+      val msgs = InMemoryQueues.drain("services/downloader")
       assert(msgs.exists(_.contains(""""state":"started"""")))
     } finally spark.streams.removeListener(hb)
+  }
+
+  test("S8 heartbeat payload stays valid JSON for an instance id with a " +
+      "quote and a backslash") {
+    val id = "inst\"1\\a"
+    val payload = new Heartbeat(new InMemorySink, "downloader", id)
+      .payload("running")
+    val node = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(payload)
+    assert(node.get("instance_id").asText == id, payload)
+    assert(node.get("state").asText == "running")
   }
 
   test("ST9 per-batch snapshot re-resolution: a merge landed between " +
