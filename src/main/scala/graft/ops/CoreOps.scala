@@ -19,10 +19,9 @@ object CoreOps {
   def decodeJobValue(df: DataFrame): DataFrame =
     // try_element_at, not element_at: under ANSI mode (Spark 4 default) a
     // malformed value without '#' must yield a null isin, not an error.
-    df.withColumn("parts", split(col("value"), "#"))
-      .withColumn("exchange", expr("try_element_at(parts, 1)"))
-      .withColumn("isin", expr("try_element_at(parts, 2)"))
-      .drop("parts")
+    df.withColumns(Map(
+      "exchange" -> try_element_at(split(col("value"), "#"), lit(1)),
+      "isin" -> try_element_at(split(col("value"), "#"), lit(2))))
 
   /** P2 — positional frame projection: WSS tick frame array -> named columns
     * (reference main.py:407-415; indices are 0-based there, element_at is

@@ -57,12 +57,16 @@ import java.nio.charset.StandardCharsets.UTF_8
   *
   * Deployment shape: ONE sink (= one connection + one channel) per
   * executor partition, created inside foreachPartition and closed when
-  * the partition is done ([[MessageSink.close]]) — the reference
-  * instead dials a fresh connection PER MESSAGE (its documented
-  * inefficiency, SURVEY §0.2); per-partition connections are the
-  * at-scale form of the same dialogue. In the sandbox the full dialogue
-  * is exercised against an in-process loopback broker that decodes
-  * frames per spec independently (SourcesSpec) — no egress, no jars. */
+  * the partition is done ([[MessageSink.close]]); a frame whose rows are
+  * already on the driver (one job's tickers) is published through the
+  * caller's own sink, one connection per `publishBatch`, closed at its
+  * end. The reference instead dials a fresh connection PER MESSAGE (its
+  * documented inefficiency, SURVEY §0.2); per-partition connections are
+  * the at-scale form of the same dialogue. Frames are buffered and
+  * flushed once per message, not once per frame. In the sandbox the
+  * full dialogue is exercised against an in-process loopback broker
+  * that decodes frames per spec independently (SourcesSpec) — no
+  * egress, no jars. */
 final class AmqpSink(host: String, port: Int, username: String,
     password: String, vhost: String = "/", tls: Boolean = false,
     sslContextProvider: Option[() => javax.net.ssl.SSLContext] = None,
@@ -176,8 +180,14 @@ private[sources] object AmqpSink {
       out.writeInt(payload.length)
       out.write(payload)
       out.writeByte(FrameEnd)
-      out.flush()
     }
+
+    /** Frames are buffered and go out together: at the end of each
+      * publish (before its confirm wait, if any), and before every other
+      * read, since each read waits on a reply to what was sent. */
+    private def flush(): Unit = { out.flush(); flushes += 1 }
+    /** Flushes so far, handshake included. */
+    private[sources] var flushes = 0L
 
     private def method(classId: Int, methodId: Int)
         (args: ByteArrayOutputStream => Unit): Array[Byte] = {
@@ -221,6 +231,7 @@ private[sources] object AmqpSink {
       * error surfaced loudly — silently skipping either would leave the
       * caller blocked on a socket the broker has already abandoned. */
     private def expectMethod(classId: Int, methodId: Int): Array[Byte] = {
+      flush()
       while (true) {
         val (t, _, p) = readFrame()
         if (t == FrameMethod) {
@@ -240,7 +251,6 @@ private[sources] object AmqpSink {
 
     // --- the handshake (constructor body) ---
     out.write("AMQP".getBytes(UTF_8)); out.write(Array[Byte](0, 0, 9, 1))
-    out.flush()
     expectMethod(10, 10) // connection.start
     sendFrame(FrameMethod, 0, method(10, 11) { b => // start-ok
       writeInt(b, 0) // client-properties: empty field table
@@ -337,6 +347,7 @@ private[sources] object AmqpSink {
           java.util.Arrays.copyOfRange(body, off, off + len))
         off += len
       }
+      flush()
       if (confirms) {
         publishSeq += 1
         // synchronous confirm: block for basic.ack covering this tag;

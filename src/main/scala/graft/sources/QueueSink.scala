@@ -1,6 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.{LocalTableScanExec, SQLExecution}
 import org.apache.spark.sql.functions._
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
@@ -11,9 +13,11 @@ import scala.jdk.CollectionConverters._
   * delivery and no publisher confirms (main.py:208-230) — i.e. at-least-once.
   * Engine shape: a [[MessageSink]] trait written to from
   * `foreachBatch`/`foreachPartition`, so one connection per partition and
-  * no driver funnel. Duplicates are possible by contract; downstream dedup
-  * keys (exchange, isin, ts) — the explicit operator property the
-  * reference leaves implicit (SURVEY.md §0.2). */
+  * no driver funnel — except for a frame whose rows are already on the
+  * driver, which the driver publishes itself with no Spark job (see
+  * [[QueueSink.publishBatch]]). Duplicates are possible by contract;
+  * downstream dedup keys (exchange, isin, ts) — the explicit operator
+  * property the reference leaves implicit (SURVEY.md §0.2). */
 trait MessageSink extends Serializable {
   /** Publish one JSON payload; true on success (reference returns only a
     * bool, main.py:229-230). Must be idempotence-tolerant downstream. */
@@ -21,7 +25,8 @@ trait MessageSink extends Serializable {
 
   /** Release what this copy holds (a connection). Spark deserializes one
     * copy of the sink per task, so the partition writers below close
-    * their copy when the partition is done. */
+    * their copy when the partition is done; a driver-local publish closes
+    * the caller's own sink the same way, and its next publish re-dials. */
   def close(): Unit = ()
 }
 
@@ -32,7 +37,8 @@ trait MessageSink extends Serializable {
   * in-process against an independently-decoding loopback broker
   * (SourcesSpec). It follows exactly the deployment seam described
   * here: one connection per partition (a @transient connection re-dials
-  * on the executor side), durable declare once per queue, persistent
+  * on the executor side; a driver-local frame uses the caller's sink
+  * once), durable declare once per queue, persistent
   * JSON per message — at-least-once, with `dedupForPublish` below as
   * the engine-side idempotence layer. InMemorySink remains the fast
   * test double for the non-wire specs. */
@@ -60,12 +66,15 @@ final class InMemorySink extends MessageSink {
 
 object QueueSink {
 
-  /** S6 — publish every row's `envelope` column to the queue,
-    * partition-local (usable directly and from streaming foreachBatch). */
+  /** S6 — publish every row's `envelope` column to the queue (usable
+    * directly and from streaming foreachBatch). The selection is planned
+    * once: if its rows are already on the driver (a `LocalTableScanExec`,
+    * as for [[RestSource.fetchTickers]]' frames), the driver publishes them
+    * through `sink` and closes it, and no Spark job runs; otherwise each
+    * partition publishes through its own copy of `sink`. */
   def publishBatch(df: DataFrame, sink: MessageSink, queue: String): Unit =
-    df.select(col("envelope")).foreachPartition { rows: Iterator[Row] =>
-      try rows.foreach(r => sink.publish(queue, r.getString(0)))
-      finally sink.close()
+    publishRows(df.select(col("envelope")), sink) { (s, r) =>
+      s.publish(queue, r.getString(0))
     }
 
   /** The publish path is at-least-once by contract (no publisher confirms,
@@ -83,14 +92,32 @@ object QueueSink {
 
   /** S7 — job-state writeback: one `[{"action": a}]` message per transition
     * row, keyed by job id (the reference PUTs
-    * set_downloader_jobs_state/{id} fire-and-forget, main.py:186-205). */
+    * set_downloader_jobs_state/{id} fire-and-forget, main.py:186-205).
+    * Same driver-local/per-partition split as [[publishBatch]]. */
   def writebackStates(transitions: DataFrame, sink: MessageSink,
       queue: String): Unit =
-    transitions.select(col("job_id"), col("action"))
-      .foreachPartition { rows: Iterator[Row] =>
-        try rows.foreach { r =>
-          sink.publish(s"$queue/${r.getLong(0)}",
-            s"""[{"action": ${r.getInt(1)}}]""")
-        } finally sink.close()
+    publishRows(transitions.select(col("job_id"), col("action")), sink) {
+      (s, r) => s.publish(s"$queue/${r.getLong(0)}",
+        s"""[{"action": ${r.getInt(1)}}]""")
+    }
+
+  /** Runs `each` over `df`'s rows under ONE `QueryExecution` and one SQL
+    * execution id: `Dataset.foreachPartition` would plan a second one of
+    * its own after the plan check, and deserialize each row to a `Row`. */
+  private def publishRows(df: DataFrame, sink: MessageSink)(
+      each: (MessageSink, InternalRow) => Unit): Unit = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("publish")) {
+      qe.executedPlan match {
+        case local: LocalTableScanExec =>
+          try local.executeCollect().foreach(each(sink, _))
+          finally sink.close()
+        case _ =>
+          qe.toRdd.foreachPartition { rows =>
+            try rows.foreach(each(sink, _))
+            finally sink.close()
+          }
       }
+    }
+  }
 }

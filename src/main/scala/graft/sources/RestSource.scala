@@ -1,16 +1,19 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 import graft.schema.Job
 
 /** S1-S4 — REST poll sources.
   *
   * The reference fetches one job / one ticker per blocking HTTP call
   * (main.py:108-140, bitstamp/client.py:25-65, bitfinex/client.py:22-36).
-  * Engine shape: a pluggable [[HttpFetcher]] does the edge I/O (driver-side
-  * for the tiny job queue; per-partition for ticker fan-out), and the
-  * payloads immediately become DataFrames with explicit schemas + a
+  * Engine shape: a pluggable [[HttpFetcher]] does the edge I/O on the
+  * driver (one tiny job-queue row; one ticker per pair, the pair list
+  * bounded by the 84-row currency dimension), and the payloads
+  * immediately become local DataFrames with explicit schemas + a
   * `status` column — the reference's `(status_code, json)` tuple as rows,
   * so non-200s are data (filter P7), not control flow. */
 trait HttpFetcher extends Serializable {
@@ -131,26 +134,30 @@ object RestSource {
     }
   }
 
-  /** S3/S4 — fan out ticker fetches per pair *inside partitions*: the local
-    * pair list already splits into min(n, defaultParallelism) partitions,
-    * no shuffle, each with its own fetcher copy. Output: (exchange, pair,
-    * status, body) with non-200/transport errors as status rows. */
+  /** S3/S4 — fetch each pair's ticker on the driver, once, when called:
+    * one blocking GET per pair, as in the reference. The rows come back as
+    * a local frame, so every action on it (or on [[parseTicks]] over it)
+    * sees the same ticks without a second GET, and the projections over it
+    * fold into a `LocalRelation` on the driver (no Spark job). Output:
+    * (exchange, pair, status, body) with non-200/transport errors as
+    * status rows. */
   def fetchTickers(spark: SparkSession, pairs: Seq[(String, String, String)],
       fetcher: HttpFetcher): DataFrame = {
-    import spark.implicits._
-    val in = pairs.toDF("exchange", "base", "quote")
-    val fetched = in.as[(String, String, String)].mapPartitions { it =>
-      it.map { case (exchange, base, quote) =>
-        val url = exchange match {
-          case "btsp" => bitstampTickerUrl(base, quote)
-          case _ => bitfinexTickerUrl(base, quote)
-        }
-        val (status, body) = fetcher.get(url)
-        (exchange, (base + quote).toLowerCase, status, body)
+    val rows = pairs.map { case (exchange, base, quote) =>
+      val url = exchange match {
+        case "btsp" => bitstampTickerUrl(base, quote)
+        case _ => bitfinexTickerUrl(base, quote)
       }
+      val (status, body) = fetcher.get(url)
+      Row(exchange, (base + quote).toLowerCase, status, body)
     }
-    fetched.toDF("exchange", "pair", "status", "body")
+    spark.createDataFrame(rows.asJava, TickerSchema)
   }
+
+  private val TickerSchema = StructType(Seq(
+    StructField("exchange", StringType), StructField("pair", StringType),
+    StructField("status", IntegerType, nullable = false),
+    StructField("body", StringType)))
 
   /** Parse fetched Bitstamp/Bitfinex ticker bodies into the canonical tick
     * shape. Both exchanges serialize numerics as STRINGS

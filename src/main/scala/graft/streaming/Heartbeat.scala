@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 import graft.Bench.esc
 import graft.sources.MessageSink
@@ -16,16 +16,21 @@ final class Heartbeat(sink: MessageSink, appName: String,
     instanceId: String = java.util.UUID.randomUUID().toString)
     extends StreamingQueryListener {
 
-  private[streaming] def payload(state: String): String = {
+  /** The "running" beat also carries the trigger's rows and phase split
+    * ([[TriggerFields]]). */
+  private[streaming] def payload(state: String,
+      trigger: Option[StreamingQueryProgress] = None): String = {
     val host = java.net.InetAddress.getLocalHost
-    s"""{"hostname":"${esc(host.getHostName)}","ipaddr":"${esc(host.getHostAddress)}","instance_id":"${esc(instanceId)}","state":"$state"}"""
+    s"""{"hostname":"${esc(host.getHostName)}","ipaddr":"${esc(host.getHostAddress)}","instance_id":"${esc(instanceId)}","state":"$state"""" +
+      trigger.map("," + TriggerFields(_)).getOrElse("") + "}"
   }
 
   override def onQueryStarted(e: QueryStartedEvent): Unit =
     sink.publish(s"services/$appName", payload("started"))
 
   override def onQueryProgress(e: QueryProgressEvent): Unit =
-    sink.publish(s"services/$appName/$instanceId", payload("running"))
+    sink.publish(s"services/$appName/$instanceId",
+      payload("running", Some(e.progress)))
 
   override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
     sink.publish(s"services/$appName/$instanceId", payload("stopped"))

@@ -3,7 +3,7 @@ package graft.streaming
 import java.io.{File, FileOutputStream}
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 
 /** S12 — rotating file log sink (ops-plane).
@@ -87,11 +87,24 @@ final class RotatingLogListener(logger: RotatingJsonlLogger)
   override def onQueryProgress(e: QueryProgressEvent): Unit = {
     val p = e.progress
     logger.appendLine(s"""{"event":"progress","id":"${p.id}",""" +
-      s""""batch":${p.batchId},"rows":${p.numInputRows},""" +
+      s""""batch":${p.batchId},${TriggerFields(p)},""" +
       s""""ts":"${esc(p.timestamp)}"}""")
   }
 
   override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
     logger.appendLine(s"""{"event":"terminated","id":"${e.id}","error":""" +
       e.exception.map(x => "\"" + esc(x) + "\"").getOrElse("null") + "}")
+}
+
+/** A trigger's input rows and its `durationMs` split, as JSON fields for
+  * the progress log line and the heartbeat. A phase the trigger did not
+  * run (an idle trigger plans and adds no batch) reads null. */
+private[streaming] object TriggerFields {
+  val Phases: Seq[String] = Seq("latestOffset", "queryPlanning", "addBatch",
+    "walCommit", "triggerExecution")
+
+  def apply(p: StreamingQueryProgress): String =
+    s""""rows":${p.numInputRows},"durationMs":{""" + Phases.map { k =>
+      s""""$k":${Option(p.durationMs.get(k)).getOrElse("null")}"""
+    }.mkString(",") + "}"
 }

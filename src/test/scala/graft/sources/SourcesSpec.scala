@@ -3,6 +3,7 @@ package graft.sources
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Deterministic fake fetcher: canned responses per URL substring. */
 final class FakeFetcher(responses: Map[String, (Int, String)]) extends HttpFetcher {
@@ -11,7 +12,27 @@ final class FakeFetcher(responses: Map[String, (Int, String)]) extends HttpFetch
       .getOrElse((404, ""))
 }
 
+/** Records every GET URL in a process-wide queue (tasks and the driver
+  * share the JVM in local mode), then answers like `inner`. */
+final class CountingFetcher(inner: HttpFetcher) extends HttpFetcher {
+  def get(url: String, basicAuth: Option[(String, String)]): (Int, String) = {
+    CountingFetcher.gets.add(url)
+    inner.get(url, basicAuth)
+  }
+}
+
+object CountingFetcher {
+  val gets = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+}
+
 class SourcesSpec extends SparkSpec {
+
+  private def awaitBroker(broker: LoopbackAmqpBroker, messages: Int): Unit = {
+    val deadline = System.currentTimeMillis() + 10000
+    while ((broker.messages.size < messages ||
+        broker.openConnections.get() > 0) &&
+      System.currentTimeMillis() < deadline) Thread.sleep(20)
+  }
 
   test("S10 config: INI file wins over env, reference keys honored") {
     val dir = Files.createTempDirectory("cfg")
@@ -79,7 +100,7 @@ class SourcesSpec extends SparkSpec {
       "https://api.bitfinex.com/v1/pubticker/btcusd")
   }
 
-  test("S3/S4 ticker fan-out: per-partition fetch, string-decimal casts (F8)") {
+  test("S3/S4 ticker fetch: one GET per pair, string-decimal casts (F8)") {
     val fetcher = new FakeFetcher(Map(
       "ticker/btceur" -> (200,
         """{"bid": "100.5", "ask": "101.5", "last": "101.0", "high": "110.0",
@@ -96,6 +117,71 @@ class SourcesSpec extends SparkSpec {
     assert(ticks.count() == 1)
   }
 
+  test("S3/S4 the ticker GETs run once, when fetchTickers is called: " +
+      "count, parseTicks and head reuse them") {
+    CountingFetcher.gets.clear()
+    val fetcher = new CountingFetcher(new FakeFetcher(Map(
+      "ticker/btceur" -> (200, """{"bid": "100.5", "ask": "101.5"}"""),
+      "pubticker/ethusd" -> (200, """{"bid": "7.0", "ask": "9.0"}"""))))
+    val raw = RestSource.fetchTickers(spark,
+      Seq(("btsp", "btc", "eur"), ("btfx", "eth", "usd")), fetcher)
+    assert(raw.count() == 2)
+    val ticks = RestSource.parseTicks(raw)
+    assert(ticks.count() == 2)
+    assert(ticks.orderBy("pair").select("mid").head().getDouble(0) == 101.0)
+    assert(raw.head().getInt(2) == 200)
+    val urls = CountingFetcher.gets.asScala.toSeq
+    assert(urls.sorted == Seq(RestSource.bitfinexTickerUrl("eth", "usd"),
+      RestSource.bitstampTickerUrl("btc", "eur")),
+      s"each ticker URL once, got $urls")
+  }
+
+  test("S6' a driver-local frame publishes with no Spark job and closes " +
+      "the caller's sink; the next publishBatch re-dials") {
+    val broker = new LoopbackAmqpBroker("guest", "s3cret")
+    val sink = new AmqpSink("127.0.0.1", broker.port, "guest", "s3cret")
+    val fetcher = new FakeFetcher(Map("ticker/btceur" -> (200,
+      """{"bid": "100.5", "ask": "101.5"}""")))
+    def envelopes() = RestSource.parseTicks(RestSource.fetchTickers(spark,
+        Seq(("btsp", "btc", "eur")), fetcher))
+      .select(to_json(struct(col("pair"), col("mid"))).as("envelope"))
+    try {
+      scala.util.Using.resource(new graft.RunRecorder(spark.sparkContext)) { rec =>
+        QueueSink.publishBatch(envelopes(), sink, "ticks")
+        rec.flush()
+        assert(rec.jobs.size == 0, "Spark jobs ran")
+      }
+      awaitBroker(broker, 1)
+      assert(broker.connections == 1 && broker.openConnections.get() == 0,
+        s"${broker.connections} dialed, ${broker.openConnections.get()} open")
+      QueueSink.publishBatch(envelopes(), sink, "ticks")
+      awaitBroker(broker, 2)
+      assert(broker.connections == 2 && broker.openConnections.get() == 0,
+        s"${broker.connections} dialed, ${broker.openConnections.get()} open")
+      assert(broker.messages.map(_.body).toSeq ==
+        Seq.fill(2)("""{"pair":"btceur","mid":101.0}"""))
+    } finally { sink.close(); broker.close() }
+  }
+
+  test("S6' a publish flushes its frames once, not once per frame") {
+    val broker = new LoopbackAmqpBroker("guest", "s3cret")
+    val conn = new AmqpSink.Conn("127.0.0.1", broker.port, "guest", "s3cret",
+      "/")
+    try {
+      conn.declareDurableQueue("q")
+      val before = conn.flushes
+      (1 to 3).foreach(i =>
+        conn.publishPersistentJson("q", s"""{"n":$i}""".getBytes("UTF-8")))
+      assert(conn.flushes - before == 3,
+        s"${conn.flushes - before} flushes for 3 messages")
+      val deadline = System.currentTimeMillis() + 10000
+      while (broker.messages.size < 3 &&
+        System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(broker.messages.map(_.body).toSeq ==
+        (1 to 3).map(i => s"""{"n":$i}"""))
+    } finally { conn.close(); broker.close() }
+  }
+
   test("S6 dedupForPublish keeps one deterministic row per idempotence key") {
     import spark.implicits._
     val dup = Seq(
@@ -110,7 +196,7 @@ class SourcesSpec extends SparkSpec {
     assert(kept == "first") // deterministic survivor, not arbitrary
   }
 
-  test("S6 publish + S7 writeback are partition-local and at-least-once shaped") {
+  test("S6 publish + S7 writeback deliver every row of a driver-local frame") {
     InMemoryQueues.clear()
     import spark.implicits._
     val env = Seq("""{"a":1}""", """{"a":2}""").toDF("envelope")
@@ -221,9 +307,7 @@ class SourcesSpec extends SparkSpec {
         sink, "ticks")
       QueueSink.writebackStates(sc.parallelize(Seq((1L, 1100), (2L, 1200),
         (3L, 1300)), 3).toDF("job_id", "action"), sink, "jobs")
-      val deadline = System.currentTimeMillis() + 10000
-      while ((broker.messages.size < 15 || broker.openConnections.get() > 0) &&
-        System.currentTimeMillis() < deadline) Thread.sleep(20)
+      awaitBroker(broker, 15)
       assert(broker.messages.filter(_.queue == "ticks").map(_.body).sorted ==
         envelopes.sorted)
       assert(broker.messages.filter(_.queue.startsWith("jobs/")).size == 3)

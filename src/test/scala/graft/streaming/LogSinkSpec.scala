@@ -51,6 +51,16 @@ class LogSinkSpec extends SparkSpec {
       assert(got.exists(_.contains("\"event\":\"started\"")))
       assert(got.exists(l => l.contains("\"event\":\"progress\"") &&
         l.contains("\"rows\":3")))
+      // every line parses; the data trigger's line carries its phase split
+      val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      val progress = got.map(json.readTree)
+        .filter(n => n.get("event").asText == "progress" &&
+          n.get("rows").asLong == 3)
+      assert(progress.size == 1, got.mkString("\n"))
+      val d = progress.head.get("durationMs")
+      TriggerFields.Phases.foreach { k =>
+        assert(d.get(k).isNumber, s"durationMs.$k in ${progress.head}")
+      }
       assert(got.exists(l => l.contains("\"event\":\"terminated\"") &&
         l.contains("\"error\":null")))
     } finally spark.streams.removeListener(listener)

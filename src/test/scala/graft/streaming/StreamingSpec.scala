@@ -651,6 +651,17 @@ class StreamingSpec extends SparkSpec {
       GraftSqlShim.awaitListeners(spark.sparkContext)
       val msgs = InMemoryQueues.drain("services/downloader")
       assert(msgs.exists(_.contains(""""state":"started"""")))
+      // the data trigger's "running" beat carries its rows and phase split
+      val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      val beats = InMemoryQueues.drain("services/downloader/inst-1")
+        .map(json.readTree)
+      val running = beats.filter(b => b.get("state").asText == "running" &&
+        b.get("rows").asLong == 1)
+      assert(running.size == 1, beats.mkString("\n"))
+      TriggerFields.Phases.foreach { k =>
+        assert(running.head.get("durationMs").get(k).isNumber,
+          s"durationMs.$k in ${running.head}")
+      }
     } finally spark.streams.removeListener(hb)
   }
 
