@@ -98,18 +98,28 @@ object Clustering {
     var cents = base.filter(col("vec_id") < k)
       .select(col("vec_id").as("cid"), col("v").as("cv"))
       .localCheckpoint()
-    for (_ <- 0 until iters) {
-      val means = assign(base, cents)
-        .select(col("cid"), posexplode(col("v")).as(Seq("d", "x")))
-        .groupBy(col("cid"), col("d")).agg(avg(col("x")).as("m"))
-        .groupBy(col("cid"))
-        .agg(expr("transform(array_sort(collect_list(struct(d, m))), s -> s.m)")
-          .as("mv"))
-      cents = cents.join(means, Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("mv"), col("cv")).as("cv"))
-        .localCheckpoint()
-    }
+    for (_ <- 0 until iters)
+      cents = recenter(cents, assign(base, cents), Seq("cid"), "v")
     cents
+  }
+
+  /** One Lloyd recenter keyed by the caller's group columns `keys`: the
+    * per-dimension mean of the assigned rows' `vec` arrays (posexplode,
+    * `avg`, then the dimension-sorted `collect_list`), left-joined onto
+    * the (keys…, cv) centroid frame so a group that lost all its members
+    * keeps its previous centroid. Returns (keys…, cv), localCheckpoint'd
+    * (lineage stays flat across rounds). */
+  private[ops] def recenter(cents: DataFrame, assigned: DataFrame,
+      keys: Seq[String], vec: String): DataFrame = {
+    val k = keys.map(col)
+    val means = assigned.select(k :+ posexplode(col(vec)).as(Seq("d", "x")): _*)
+      .groupBy(k :+ col("d"): _*).agg(avg(col("x")).as("m"))
+      .groupBy(k: _*)
+      .agg(expr("transform(array_sort(collect_list(struct(d, m))), s -> s.m)")
+        .as("mv"))
+    cents.join(means, keys, "left")
+      .select(k :+ coalesce(col("mv"), col("cv")).as("cv"): _*)
+      .localCheckpoint()
   }
 
   /** Total within-cluster squared distance of an assignment — the

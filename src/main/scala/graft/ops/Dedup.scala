@@ -367,23 +367,21 @@ object Dedup {
     * cluster). Returns (idCol, cluster). */
   def components(nodes: DataFrame, pairs: DataFrame, idCol: String,
       d1: String = "d1", d2: String = "d2", maxIter: Int = 20): DataFrame = {
-    val (labels, converged) = minLabelRounds(nodes, pairs, idCol, d1, d2, maxIter)
     // an unconverged exit would hand the caller UNDER-MERGED clusters (and
-    // wrong survivor flags) with no signal — fail loudly instead; callers
-    // with genuinely deep duplicate chains raise maxIter
-    require(converged,
-      s"components did not converge in $maxIter rounds — candidate-pair " +
-        s"graph diameter exceeds maxIter; raise maxIter")
-    labels.select(col("src").as(idCol), col("label").as("cluster"))
+    // wrong survivor flags) with no signal — callers with genuinely deep
+    // duplicate chains (diameter > maxIter) raise maxIter
+    minLabelRounds(nodes, pairs, idCol, d1, d2, maxIter)
+      .orFail("components", "maxIter").state
+      .select(col("src").as(idCol), col("label").as("cluster"))
   }
 
   /** The min-label propagation core of [[components]], WITHOUT the
     * loud-failure contract: runs at most `maxIter` rounds and reports
     * whether a fixpoint was reached, so [[componentsHybrid]] can spend a
     * bounded budget here and fall through to star contraction instead of
-    * aborting. Returns ((src, label) frame, converged). */
+    * aborting. Returns the (src, label) frame and whether it converged. */
   private def minLabelRounds(nodes: DataFrame, pairs: DataFrame, idCol: String,
-      d1: String, d2: String, maxIter: Int): (DataFrame, Boolean) = {
+      d1: String, d2: String, maxIter: Int): Rounds.Fixpoint[DataFrame] = {
     // the STATIC frame every round joins by dst — materialized once and,
     // above the measured pin threshold, key-pinned so rounds exchange
     // only the evolving label frame ([[Fanout.pinned]], round 18; dedup
@@ -393,11 +391,9 @@ object Dedup {
       pairs.select(col(d1).as("src"), col(d2).as("dst"))
         .union(pairs.select(col(d2).as("src"), col(d1).as("dst"))),
       "dst")
-    var labels = nodes.select(col(idCol).as("src"), col(idCol).as("label"))
+    val seed = nodes.select(col(idCol).as("src"), col(idCol).as("label"))
       .localCheckpoint()
-    var i = 0
-    var converged = false
-    while (!converged && i < maxIter) {
+    Rounds.fixpoint(seed, maxIter) { (labels, i) =>
       // each node's new label: min of its own and its neighbors' labels.
       // Convergence is OBSERVED inside the checkpoint materialization
       // (round 21, guide §1.2 — don't compute things twice): an
@@ -406,7 +402,7 @@ object Dedup {
       // second action is gone — one Spark job per round, not two. The
       // count is exact (CollectMetrics sees every row exactly once in
       // the checkpoint's single full pass), and it is read from the
-      // executed plan's accumulator ([[Graph.observedCount]]) rather than
+      // executed plan's accumulator ([[Rounds.observed]]) rather than
       // through Observation's listener — accumulators land with job
       // completion, so the loop never waits on the async listener bus.
       val joinedPlan = labels.join(
@@ -420,20 +416,13 @@ object Dedup {
             .as("_chg"))
         .observe("mlr", count(when(col("_chg"), 1)).as("n_chg"))
         .select(col("src"), col("label"))
-      // plan-statistics reset ([[Graph.checkpointFresh]]) EVERY 4th
-      // round rather than every round: that caps the preserved stats
-      // number at ~3⁴ digits growth per window (harmless) while sparing
-      // the intermediate rounds the extra createDataFrame round-trip. (A
-      // checkpoint carries NO partitioning under AQE — the round-18
-      // [[graft.ops.Fanout]] finding — so there is nothing to "keep"
-      // between rounds either way.)
-      val joined = if (i % 4 == 3) Graph.checkpointFresh(joinedPlan)
-        else joinedPlan.localCheckpoint()
-      converged = Graph.observedCount(joinedPlan, "mlr") == 0L
-      labels = joined
-      i += 1
+      // plan-statistics reset ([[Rounds.fresh]]) EVERY 4th round rather
+      // than every round ([[Rounds.freshEvery4]]). (A checkpoint carries NO
+      // partitioning under AQE — the round-18 [[graft.ops.Fanout]]
+      // finding — so there is nothing to "keep" between rounds either way.)
+      (Rounds.freshEvery4(i)(joinedPlan),
+        Rounds.observed(joinedPlan, "mlr") == 0L)
     }
-    (labels, converged)
   }
 
   /** X2e'' — HYBRID component resolver (round 16, the r15 VERDICT's
@@ -462,9 +451,10 @@ object Dedup {
   def componentsHybrid(nodes: DataFrame, pairs: DataFrame, idCol: String,
       d1: String = "d1", d2: String = "d2", labelBudget: Int = 6,
       maxIter: Int = 30): DataFrame = {
-    val (labels, converged) =
-      minLabelRounds(nodes, pairs, idCol, d1, d2, labelBudget)
-    if (converged) labels.select(col("src").as(idCol), col("label").as("cluster"))
+    val labeled = minLabelRounds(nodes, pairs, idCol, d1, d2, labelBudget)
+    val labels = labeled.state
+    if (labeled.converged)
+      labels.select(col("src").as(idCol), col("label").as("cluster"))
     else {
       val labelEdges = labels.filter(col("src") =!= col("label"))
         .select(col("src").as(d1), col("label").as(d2))
@@ -507,23 +497,21 @@ object Dedup {
       idCol: String, d1: String = "d1", d2: String = "d2",
       maxIter: Int = 30): (DataFrame, Int) = {
     // normalize to (hi, lo), drop self-loops/dups
-    var edges = pairs
+    val edges0 = pairs
       .select(greatest(col(d1), col(d2)).as("hi"),
         least(col(d1), col(d2)).as("lo"))
       .filter(col("hi") =!= col("lo")).distinct()
       .localCheckpoint()
-    var i = 0
-    var converged = edges.isEmpty
-    // edge count of the current frame, maintained via observe so each
-    // round's count rides the checkpoint materialization (round 21,
-    // guide §1.2): the old per-round count() + except().isEmpty pair
-    // cost two extra actions per round — now the (exact) anti-join
-    // equality check runs ONLY in rounds where the observed count is
-    // unchanged (a changed count refutes set equality outright; both
-    // frames are distinct by construction, so equal counts + empty
-    // anti ⟺ equal sets).
-    var edgeCount = -1L
-    while (!converged && i < maxIter) {
+    // state: the edge frame and its edge count (-1 until first counted),
+    // the count maintained via observe so each round's count rides the
+    // checkpoint materialization (round 21): the old per-round count()
+    // + except().isEmpty pair cost two extra actions per round — now
+    // the (exact) anti-join equality check runs ONLY in rounds where the
+    // observed count is unchanged (a changed count refutes set equality
+    // outright; both frames are distinct by construction, so equal
+    // counts + empty anti ⟺ equal sets).
+    val contracted = Rounds.fixpoint((edges0, -1L), maxIter, edges0.isEmpty) {
+        case ((edges, edgeCount), i) =>
       // LARGE-STAR over the bidirected adjacency: (u, nbr) both ways
       val adj = edges.select(col("hi").as("u"), col("lo").as("nbr"))
         .unionAll(edges.select(col("lo").as("u"), col("hi").as("nbr")))
@@ -545,25 +533,20 @@ object Dedup {
         .filter(col("hi") =!= col("lo")).distinct()
         .observe("star", count(lit(1)).as("n_edges"))
       // every 4th round a stats reset, as in minLabelRounds
-      val afterSmall = if (i % 4 == 3) Graph.checkpointFresh(afterSmallPlan)
-        else afterSmallPlan.localCheckpoint()
-      val newCount = Graph.observedCount(afterSmallPlan, "star")
-      if (edgeCount < 0L) edgeCount = edges.count()
-      converged = newCount == edgeCount &&
-        afterSmall.join(edges, Seq("hi", "lo"), "left_anti").isEmpty
-      edgeCount = newCount
-      edges = afterSmall
-      i += 1
-    }
-    require(converged || edges.isEmpty,
-      s"componentsStar did not converge in $maxIter rounds — raise maxIter")
+      val afterSmall = Rounds.freshEvery4(i)(afterSmallPlan)
+      val newCount = Rounds.observed(afterSmallPlan, "star")
+      val oldCount = if (edgeCount < 0L) edges.count() else edgeCount
+      ((afterSmall, newCount), newCount == oldCount &&
+        afterSmall.join(edges, Seq("hi", "lo"), "left_anti").isEmpty)
+    }.orFail("componentsStar", "maxIter")
+    val edges = contracted.state._1
     // star forest: every edge is (member, component-min); roots and
     // singletons keep their own id
     val labels = nodes.select(col(idCol))
       .join(edges.select(col("hi").as(idCol), col("lo").as("cluster")),
         Seq(idCol), "left")
       .select(col(idCol), coalesce(col("cluster"), col(idCol)).as("cluster"))
-    (labels, i)
+    (labels, contracted.rounds)
   }
 
   /** [[componentsStarWithRounds]] without the round count — the drop-in

@@ -79,22 +79,23 @@ object Graph {
     // rank frame as "src" so each join is the by-name equi-join on the
     // edge source key (no self-join ambiguity).
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    var rank = e
-      .select(col("dst"), expr("1000000 div outdeg").as("contrib"))
-      .groupBy(col("dst"))
-      .agg(sum(col("contrib")).as("c"))
-      .select(col("dst").as("src"),
-        (lit(150000L) + expr("(850 * c) div 1000")).as("score"))
+    var rank = damped(
+      e.select(col("dst"), expr("1000000 div outdeg").as("contrib")), "src")
     (2 to iters).foreach { _ =>
-      rank = e.join(rank, Seq("src"))
-        .select(col("dst"), expr("score div outdeg").as("contrib"))
-        .groupBy(col("dst"))
-        .agg(sum(col("contrib")).as("c"))
-        .select(col("dst").as("src"),
-          (lit(150000L) + expr("(850 * c) div 1000")).as("score"))
+      rank = damped(e.join(rank, Seq("src"))
+        .select(col("dst"), expr("score div outdeg").as("contrib")), "src")
     }
     rank.select(col("src").as("node"), col("score"))
   }
+
+  /** The damped integer-ppm PageRank update over per-edge contributions
+    * (`dst`, `contrib`): `150000 + (850 · Σ contrib) div 1000` per
+    * destination, returned as (`key`, score). */
+  private def damped(contribs: DataFrame, key: String): DataFrame =
+    contribs.groupBy(col("dst"))
+      .agg(sum(col("contrib")).as("c"))
+      .select(col("dst").as(key),
+        (lit(150000L) + expr("(850 * c) div 1000")).as("score"))
 
   /** [[pageRank]] RETAINING the per-round score frames (round 19) —
     * the auxiliary state incremental maintenance needs: under the
@@ -125,33 +126,18 @@ object Graph {
     // re-aggregated the |E|-row static frame for the same rows. No
     // extra checkpoint: the seed is a narrow projection of deg's cache.
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    var rank = deg
-      .select(col("src").as("node"), lit(1000000L).as("score"))
-    val hist = Seq.newBuilder[DataFrame]
-    hist += rank
+    val seed = deg.select(col("src").as("node"), lit(1000000L).as("score"))
     // round 1 CONSTANT-FOLDED like [[pageRank]]: every round-0 score is
     // the literal 1,000,000, so round 1 reads `1000000 div outdeg`
     // straight off the static frame — no rank join.
-    rank = e
-      .select(col("dst"), expr("1000000 div outdeg").as("contrib"))
-      .groupBy(col("dst"))
-      .agg(sum(col("contrib")).as("c"))
-      .select(col("dst").as("node"),
-        (lit(150000L) + expr("(850 * c) div 1000")).as("score"))
-      .localCheckpoint(eager = false)
-    hist += rank
-    (2 to iters).foreach { _ =>
-      rank = e.join(rank.select(col("node").as("src"), col("score")),
-          Seq("src"))
-        .select(col("dst"), expr("score div outdeg").as("contrib"))
-        .groupBy(col("dst"))
-        .agg(sum(col("contrib")).as("c"))
-        .select(col("dst").as("node"),
-          (lit(150000L) + expr("(850 * c) div 1000")).as("score"))
-        .localCheckpoint(eager = false)
-      hist += rank
+    val hist = Rounds.fixed(seed, iters) { (rank, k) =>
+      damped(
+        if (k == 1) e.select(col("dst"), expr("1000000 div outdeg").as("contrib"))
+        else e.join(rank.select(col("node").as("src"), col("score")), Seq("src"))
+          .select(col("dst"), expr("score div outdeg").as("contrib")),
+        "node")
     }
-    (hist.result(), deg)
+    (hist, deg)
   }
 
   /** X7z — INCREMENTAL PAGERANK MAINTENANCE (round 19): the standing
@@ -197,9 +183,6 @@ object Graph {
     * recompute over the merged final edge set (x7_incr_pagerank). */
   def pageRankIncremental(hist: Seq[DataFrame], edges1: DataFrame,
       changed: DataFrame, iters: Int, deg0: DataFrame): DataFrame = {
-    require(hist.length == iters + 1,
-      s"history must carry rounds 0..$iters, got ${hist.length} frames")
-    require(iters >= 1, s"iters must be >= 1, got $iters")
     // NO pre-joined degree-annotated frame and NO Fanout.pinned here
     // (round 19, measured at 1M nodes): the rounds touch the static
     // state only through dirty-restricted joins whose frontier side is
@@ -213,15 +196,9 @@ object Graph {
     // annotation and mix lookup all hash the frontier-sized side and
     // stream-scan the big one — zero graph-sized shuffle per round.
     val e = edges1.localCheckpoint(eager = false)
-    // the frontier-keyed sides are HINTED into broadcast joins: a
-    // checkpoint's preserved plan statistics over-estimate the dirty
-    // frames, so the optimizer otherwise plans sort-merge joins whose
-    // map sides shuffle the GRAPH-sized frame every round (measured at
-    // 1M nodes: 180 MB maintained shuffle for a 100-edge change — the
-    // frontier maintenance thesis inverted). The hint encodes the
-    // operator's own applicability contract: maintenance beats
-    // recompute exactly when the invalidation frontier is
-    // broadcast-class.
+    // the frontier-keyed sides are HINTED into broadcast joins (measured
+    // at 1M nodes without them: 180 MB maintained shuffle for a 100-edge
+    // change — see [[Rounds.maintain]])
     val srcChanged = changed.select(col("src")).distinct()
     // DEGREES (round 20, r19 verdict item 4 — the last O(graph)
     // shuffle on the maintain path, gone because the caller retains
@@ -238,40 +215,28 @@ object Graph {
         .groupBy(col("src"))
         .agg(count(lit(1)).cast("long").as("outdeg")))
       .localCheckpoint(eager = false)
-    val dirty1 = changed.select(col("dst").as("node"))
+    val dirtySeed = changed.select(col("dst").as("node"))
       .unionByName(e.join(broadcast(srcChanged), Seq("src"), "left_semi")
         .select(col("dst").as("node")))
-      .distinct().localCheckpoint(eager = false)
     // v1's round-0 frame: the constant seed over v1 sources
-    var mixPrev = deg
-      .select(col("src").as("node"), lit(1000000L).as("score"))
-    var dirty = dirty1
-    var newScores: DataFrame = null
-    (1 to iters).foreach { k =>
-      newScores = broadcast(broadcast(e
-        .join(broadcast(dirty.select(col("node").as("dst"))), Seq("dst"),
-          "left_semi"))
-        .join(deg, Seq("src")))
-        .join(mixPrev.select(col("node").as("src"), col("score")),
-          Seq("src"))
-        .select(col("dst"), expr("score div outdeg").as("contrib"))
-        .groupBy(col("dst")).agg(sum(col("contrib")).as("c"))
-        .select(col("dst").as("node"),
-          (lit(150000L) + expr("(850 * c) div 1000")).as("score"))
-        .localCheckpoint(eager = false)
-      if (k < iters) {
-        val nextDirty = dirty1.unionByName(
-            e.join(broadcast(dirty.select(col("node").as("src"))), Seq("src"),
-                "left_semi")
-              .select(col("dst").as("node")))
-          .distinct().localCheckpoint(eager = false)
-        mixPrev = hist(k).join(broadcast(dirty), Seq("node"), "left_anti")
-          .unionByName(newScores)
-        dirty = nextDirty
-      }
+    val seed = deg.select(col("src").as("node"), lit(1000000L).as("score"))
+    Rounds.maintain(hist, iters, dirtySeed, seed) { (dirty, mix, _) =>
+      // two hints, neither nested in the other: the inner marks the
+      // dirty in-edges `e ⋉ dirty` as the broadcast side of the degree
+      // join, the outer marks `(e ⋉ dirty) ⋈ deg` as the broadcast side
+      // of the mix join
+      val recomputed = damped(broadcast(broadcast(e
+          .join(broadcast(dirty.select(col("node").as("dst"))), Seq("dst"),
+            "left_semi"))
+          .join(deg, Seq("src")))
+        .join(mix.select(col("node").as("src"), col("score")), Seq("src"))
+        .select(col("dst"), expr("score div outdeg").as("contrib")), "node")
+      val reach = e
+        .join(broadcast(dirty.select(col("node").as("src"))), Seq("src"),
+          "left_semi")
+        .select(col("dst").as("node"))
+      (recomputed, reach)
     }
-    hist(iters).join(broadcast(dirty), Seq("node"), "left_anti")
-      .unionByName(newScores)
   }
 
   /** X10b' — PageRank with DANGLING-NODE mass redistribution (round 14).
@@ -484,13 +449,12 @@ object Graph {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
     require(rounds >= 1 && rounds <= 8,
       s"rounds must be in [1,8], got $rounds")
-    var und = undirectedEdges(edges).localCheckpoint(eager = false)
-    (1 to rounds).foreach { _ =>
-      und = und.join(edgeSupport(und), Seq("a", "b"), "left")
+    val und = Rounds.fixed(
+        undirectedEdges(edges).localCheckpoint(eager = false), rounds) {
+      (und, _) => und.join(edgeSupport(und), Seq("a", "b"), "left")
         .filter(coalesce(col("support"), lit(0L)) >= (k - 2).toLong)
         .select(col("a"), col("b"))
-        .localCheckpoint(eager = false)
-    }
+    }.last
     und.join(edgeSupport(und), Seq("a", "b"), "left")
       .select(col("a"), col("b"),
         coalesce(col("support"), lit(0L)).as("support"))
@@ -606,25 +570,23 @@ object Graph {
     // hub seed frame itself is never needed: round 1's hub pass reads
     // auth₁, and the final full-outer names every node from hub side
     // membership — which round 1's hRaw rebuilds from e directly).
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    var auth: DataFrame = null
-    var hub: DataFrame = null
-    (1 to rounds).foreach { r =>
-      val aRaw = if (r == 1)
-        e.groupBy(col("dst"))
+    // each round is two half-rounds, each cut: odd half-round k is the
+    // authority pass over hub k − 1, even k the hub pass over authority
+    // k − 1 (the seed frame is never read: round 1's authority pass is
+    // the fold above)
+    val halves = Rounds.fixed(e, 2 * rounds) { (prev, k) =>
+      if (k % 2 == 1) rescale(
+        (if (k == 1) e.groupBy(col("dst"))
           .agg((count(lit(1)) * 1000000L).as("a"))
-          .select(col("dst").as("node"), col("a"))
-      else
-        e.join(hub.select(col("node").as("src"), col("h")), Seq("src"))
-          .groupBy(col("dst")).agg(sum(col("h")).as("a"))
-          .select(col("dst").as("node"), col("a"))
-      auth = rescale(aRaw, "a").localCheckpoint(eager = false)
-      val hRaw = e
-        .join(auth.select(col("node").as("dst"), col("a")), Seq("dst"))
+        else e.join(prev.select(col("node").as("src"), col("h")), Seq("src"))
+          .groupBy(col("dst")).agg(sum(col("h")).as("a")))
+          .select(col("dst").as("node"), col("a")), "a")
+      else rescale(e
+        .join(prev.select(col("node").as("dst"), col("a")), Seq("dst"))
         .groupBy(col("src")).agg(sum(col("a")).as("h"))
-        .select(col("src").as("node"), col("h"))
-      hub = rescale(hRaw, "h").localCheckpoint(eager = false)
+        .select(col("src").as("node"), col("h")), "h")
     }
+    val (auth, hub) = (halves(2 * rounds - 1), halves.last)
     hub.join(auth, Seq("node"), "full_outer")
       .select(col("node"),
         coalesce(col("h"), lit(0L)).as("hub_ppm"),
@@ -660,23 +622,15 @@ object Graph {
   def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1 && rounds <= 100, s"rounds must be in [1,100], got $rounds")
-    def degrees(und: DataFrame): DataFrame =
-      und.select(col("a").as("v"))
-        .unionAll(und.select(col("b").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("dg"))
-    var und = edges.select(
-        least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint(eager = false)
-    (1 to rounds).foreach { _ =>
-      val keep = degrees(und).filter(col("dg") >= k).select(col("v"))
-      und = und
-        .join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
-        .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
-        .localCheckpoint(eager = false)
-    }
-    degrees(und).select(col("v").as("node"), col("dg").as("core_deg"))
+    val core = Rounds.fixed(
+        undirectedEdges(edges).localCheckpoint(eager = false), rounds) {
+      (und, _) =>
+        val keep = degreesOfUnd(und).filter(col("dg") >= k).select(col("v"))
+        und
+          .join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
+          .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
+    }.last
+    degreesOfUnd(core).select(col("v").as("node"), col("dg").as("core_deg"))
   }
 
   /** X10 — PERSONALIZED PageRank: rank relative to a source set S —
@@ -765,12 +719,17 @@ object Graph {
     // the pin threshold the cache's visible HashPartitioning(src) keeps
     // the per-hop join from re-shuffling the edge frame every round
     val e = Fanout.pinned(edges.select(col("src"), col("dst")), "src")
-    var dist = sources.select(col("node").cast("long").as("node"))
+    val seed = sources.select(col("node").cast("long").as("node"))
       .distinct()
       .withColumn("hops", lit(0L))
       .localCheckpoint(eager = false)
-    var frontier = dist
-    (1 to maxHops).foreach { h =>
+    // hop h's merged frame (node, _ph, _dh) holds both the reached set
+    // and the frontier it discovered; hop 0's is the seed itself
+    def dist(m: DataFrame, h: Int): DataFrame = if (h == 0) m
+      else m.select(col("node"), coalesce(col("_ph"), col("_dh")).as("hops"))
+    def frontier(m: DataFrame, h: Int): DataFrame = if (h == 0) m
+      else m.filter(col("_ph").isNull).select(col("node"), col("_dh").as("hops"))
+    val merged = Rounds.fixed(seed, maxHops) { (m, h) =>
       // BFS invariant: first discovery IS the minimum hop count. The
       // membership check and state update fuse into ONE full-outer
       // join (the [[sssp]] shape): merged comes out hash-partitioned
@@ -778,19 +737,14 @@ object Graph {
       // shuffle work is the frontier-sized discovery (measured at 1M
       // nodes: ~3× wall vs the per-hop groupBy-min re-aggregation,
       // which re-shuffled the whole reached set every round)
-      val discovered = frontier
-        .join(e, frontier("node") === e("src"))
+      val f = frontier(m, h - 1)
+      val discovered = f.join(e, f("node") === e("src"))
         .select(col("dst").as("node")).distinct()
         .withColumn("_dh", lit(h.toLong))
-      val merged = dist.select(col("node"), col("hops").as("_ph"))
+      dist(m, h - 1).select(col("node"), col("hops").as("_ph"))
         .join(discovered, Seq("node"), "full_outer")
-        .localCheckpoint(eager = false)
-      frontier = merged.filter(col("_ph").isNull)
-        .select(col("node"), col("_dh").as("hops"))
-      dist = merged.select(col("node"),
-        coalesce(col("_ph"), col("_dh")).as("hops"))
     }
-    dist
+    dist(merged.last, maxHops)
   }
 
   /** Co-supply demo graph: suppliers are adjacent when they supply the
@@ -974,36 +928,6 @@ object Graph {
     * the SCC condensation (trim flattens DAG tails, so typically
     * small); non-convergence fails LOUDLY via require.
     * Returns (node, scc_id). */
-  /** localCheckpoint + plan-statistics RESET, for iterative loops whose
-    * per-round plan JOINS its own previous output. Spark's checkpoint
-    * preserves the source plan's statistics (SPARK-39748), and join
-    * stats are a PRODUCT of the children's sizeInBytes — so a loop that
-    * self-joins k times per round grows the preserved BigInt
-    * geometrically (digits × k per round); by round ~10 the stats
-    * visitor ITSELF becomes the bottleneck, multiplying million-digit
-    * integers during planning (measured: 980 CPU-seconds inside
-    * SizeInBytesOnlyStatsPlanVisitor on a 12-node fixture). The
-    * createDataFrame round-trip rebuilds the frame on a fresh leaf with
-    * default stats — an O(rows) re-encode that keeps planning O(1) for
-    * every later round. */
-  private[ops] def checkpointFresh(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint()
-    cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
-  }
-
-  /** The single long value of a named `observe` metric, read from the
-    * dataset's EXECUTED plan after the action that materialized it
-    * (round 21): CollectMetrics is accumulator-backed, so the value
-    * lands with job completion — no second action per loop round and
-    * no wait on the async listener bus (Observation.get would wait on
-    * it for the same number). Shared with [[graft.ops.Dedup]]'s
-    * component loops. */
-  private[ops] def observedCount(df: DataFrame, name: String): Long =
-    df.queryExecution.observedMetrics.getOrElse(name,
-      throw new IllegalStateException(
-        s"observed metric '$name' absent — checkpoint did not execute"))
-      .getLong(0)
-
   def scc(edges: DataFrame, maxOuter: Int = 10,
       maxInner: Int = 40): DataFrame = {
     val raw = edges.select(col("src").cast("long").as("src"),
@@ -1015,155 +939,129 @@ object Graph {
       .localCheckpoint()
     val e0 = raw.filter(col("src") =!= col("dst")).distinct()
       .localCheckpoint()
-    var remainingN = allNodes
-    var remainingE = e0
-    var assigned = allNodes.filter(lit(false))
-      .withColumn("scc_id", col("node"))
-    var outer = 0
-    var doneAll = remainingN.isEmpty
-    while (!doneAll && outer < maxOuter) {
+    // (assigned (node, scc_id), remaining nodes, remaining edges)
+    type Peel = (DataFrame, DataFrame, DataFrame)
+    // assign `found` and drop the `gone` nodes (its node column) and
+    // their edges from the remaining subgraph
+    def remove(p: Peel, found: DataFrame, gone: DataFrame): Peel = {
+      val assigned = p._1.unionAll(found).localCheckpoint()
+      val left = Rounds.fresh(p._2.join(gone, Seq("node"), "left_anti"))
+      (assigned, left, Rounds.fresh(p._3
+        .join(left.select(col("node").as("src")), Seq("src"), "left_semi")
+        .join(left.select(col("node").as("dst")), Seq("dst"), "left_semi")))
+    }
+    // Min-label fixpoint = HOOK + POINTER-DOUBLING PREFIX-MIN:
+    //  - hook: color(u) ← min(color(u), min color over in-edges)
+    //    — one round per hop, but covers ALL branches, and its
+    //    fixpoint alone proves global correctness (if no hook can
+    //    lower any color, induction along any path gives
+    //    color(u) = min reaching node — so stopping on "no color
+    //    changed" is sound no matter what the accelerator below
+    //    has or hasn't finished).
+    //  - accelerate: each node carries ptr(u) = a node that
+    //    REACHES u (seeded with its min in-neighbor) and pval(u) =
+    //    the min id on the known ptr(u)→u path. Per round:
+    //    pval ← min(pval(u), pval(ptr(u))); ptr ← ptr(ptr(u));
+    //    color ← min(color, pval). This is Wyllie list-ranking
+    //    accumulation: ptr doubles its distance back along the
+    //    in-neighbor chain every round INDEPENDENT of id layout,
+    //    so a diameter-D chain/cycle closes in ~log2(D) rounds.
+    //    (Jumping on the color itself — color(color(u)) — is NOT
+    //    enough: on a ring whose ids increase along the walk,
+    //    color(u) stays u until the wavefront arrives and there is
+    //    nothing to jump through; measured as a maxInner abort.)
+    //    Sound because every pval entry lies on a real path into
+    //    u, hence reaches u.
+    def minLabelFixpoint(nodesDf: DataFrame, edgeFrame: DataFrame,
+        what: String): DataFrame = {
+      val inMin = edgeFrame.groupBy(col("dst").as("node"))
+        .agg(min(col("src")).as("pmin"))
+      val seed = Rounds.fresh(
+        nodesDf.select(col("node")).join(inMin, Seq("node"), "left")
+          .select(col("node"), col("node").as("color"),
+            coalesce(col("pmin"), col("node")).as("ptr"),
+            least(col("node"), coalesce(col("pmin"), col("node")))
+              .as("pval")))
+      Rounds.fixpoint(seed, maxInner) { (labels, _) =>
+        val hooked = labels.join(
+            edgeFrame.join(labels.select(col("node").as("src"),
+                col("color").as("scol")), Seq("src"))
+              .groupBy(col("dst").as("node"))
+              .agg(min(col("scol")).as("mincol")),
+            Seq("node"), "left")
+          .select(col("node"), col("color").as("old"),
+            least(col("color"), col("mincol")).as("color"),
+            col("ptr"), col("pval"))
+        val jumped = hooked.join(
+            hooked.select(col("node").as("ptr"), col("ptr").as("pptr"),
+              col("pval").as("ppval")),
+            Seq("ptr"), "left")
+          .select(col("node"), col("old"),
+            least(col("color"), col("pval"), col("ppval")).as("color"),
+            coalesce(col("pptr"), col("ptr")).as("ptr"),
+            least(col("pval"), col("ppval")).as("pval"))
+        // Rounds.fresh, not a plain localCheckpoint: the plan joins
+        // `labels` several times, so PRESERVED stats would grow digits
+        // ×k per round. The fixpoint check rides the SAME
+        // materialization as an observe metric (one action per
+        // hook+jump round, not two).
+        val jumpedObs = jumped
+          .select(col("node"), col("color"), col("ptr"), col("pval"),
+            (col("color") =!= col("old")).as("_chg"))
+          .observe("mlf", count(when(col("_chg"), 1)).as("n_chg"))
+          .select(col("node"), col("color"), col("ptr"), col("pval"))
+        (Rounds.fresh(jumpedObs), Rounds.observed(jumpedObs, "mlf") == 0L)
+      }.orFail(s"scc $what", "maxInner").state.select(col("node"), col("color"))
+    }
+    val start: Peel =
+      (allNodes.filter(lit(false)).withColumn("scc_id", col("node")),
+        allNodes, e0)
+    Rounds.fixpoint(start, maxOuter, allNodes.isEmpty) { (outer, _) =>
       // 1) trim sources/sinks of the remaining subgraph TO FIXPOINT —
       // one trivial node's removal exposes the next (a DAG tail trims
       // one layer per pass), so a single pass per outer round would
-      // burn an outer round per chain hop
-      var trimming = true
-      var t = 0
-      while (trimming && t < maxInner) {
-        val hasOut = remainingE.select(col("src").as("node")).distinct()
-        val hasIn = remainingE.select(col("dst").as("node")).distinct()
+      // burn an outer round per chain hop. Running out of passes is
+      // harmless: the coloring below peels what trim left.
+      val trimmed = Rounds.fixpoint(outer, maxInner) { (p, _) =>
+        val (_, nodes, es) = p
+        val hasOut = es.select(col("src").as("node")).distinct()
+        val hasIn = es.select(col("dst").as("node")).distinct()
         // emptiness observed inside the checkpoint materialization
-        // (round 21, guide §1.2 — one action per trim pass, not two)
-        val trivialPlan = remainingN.join(hasOut, Seq("node"), "left_anti")
-          .unionAll(remainingN.join(hasIn, Seq("node"), "left_anti"))
+        // (one action per trim pass, not two)
+        val trivialPlan = nodes.join(hasOut, Seq("node"), "left_anti")
+          .unionAll(nodes.join(hasIn, Seq("node"), "left_anti"))
           .distinct()
           .observe("trim", count(lit(1)).as("n_trivial"))
-        val trivial = checkpointFresh(trivialPlan)
-        trimming = observedCount(trivialPlan, "trim") > 0L
-        if (trimming) {
-          assigned = assigned
-            .unionAll(trivial.withColumn("scc_id", col("node")))
-            .localCheckpoint()
-          remainingN = checkpointFresh(
-            remainingN.join(trivial, Seq("node"), "left_anti"))
-          remainingE = checkpointFresh(remainingE
-            .join(remainingN.select(col("node").as("src")), Seq("src"),
-              "left_semi")
-            .join(remainingN.select(col("node").as("dst")), Seq("dst"),
-              "left_semi"))
-        }
-        t += 1
-      }
-      if (!remainingN.isEmpty) {
-        // hook+jump² min-label fixpoint: one pull of the min label
-        // across `edgeFrame`, then two pointer-doubling shortcuts
-        // label(u) ← min(label(u), label(label(u))). Labels are always
-        // node ids of the same frame, so the jump self-join hits.
-        // Covered label-path distance grows d → ~4d+3 per round —
-        // fixpoint in O(log diameter) rounds, checked via `changed`.
-        // Min-label fixpoint = HOOK + POINTER-DOUBLING PREFIX-MIN:
-        //  - hook: color(u) ← min(color(u), min color over in-edges)
-        //    — one round per hop, but covers ALL branches, and its
-        //    fixpoint alone proves global correctness (if no hook can
-        //    lower any color, induction along any path gives
-        //    color(u) = min reaching node — so stopping on "no color
-        //    changed" is sound no matter what the accelerator below
-        //    has or hasn't finished).
-        //  - accelerate: each node carries ptr(u) = a node that
-        //    REACHES u (seeded with its min in-neighbor) and pval(u) =
-        //    the min id on the known ptr(u)→u path. Per round:
-        //    pval ← min(pval(u), pval(ptr(u))); ptr ← ptr(ptr(u));
-        //    color ← min(color, pval). This is Wyllie list-ranking
-        //    accumulation: ptr doubles its distance back along the
-        //    in-neighbor chain every round INDEPENDENT of id layout,
-        //    so a diameter-D chain/cycle closes in ~log2(D) rounds.
-        //    (Jumping on the color itself — color(color(u)) — is NOT
-        //    enough: on a ring whose ids increase along the walk,
-        //    color(u) stays u until the wavefront arrives and there is
-        //    nothing to jump through; measured as a maxInner abort.)
-        //    Sound because every pval entry lies on a real path into
-        //    u, hence reaches u.
-        def minLabelFixpoint(nodesDf: DataFrame, edgeFrame: DataFrame,
-            what: String): DataFrame = {
-          val inMin = edgeFrame.groupBy(col("dst").as("node"))
-            .agg(min(col("src")).as("pmin"))
-          var labels = checkpointFresh(
-            nodesDf.select(col("node")).join(inMin, Seq("node"), "left")
-              .select(col("node"), col("node").as("color"),
-                coalesce(col("pmin"), col("node")).as("ptr"),
-                least(col("node"), coalesce(col("pmin"), col("node")))
-                  .as("pval")))
-          var changed = true
-          var i = 0
-          while (changed && i < maxInner) {
-            val hooked = labels.join(
-                edgeFrame.join(labels.select(col("node").as("src"),
-                    col("color").as("scol")), Seq("src"))
-                  .groupBy(col("dst").as("node"))
-                  .agg(min(col("scol")).as("mincol")),
-                Seq("node"), "left")
-              .select(col("node"), col("color").as("old"),
-                least(col("color"), col("mincol")).as("color"),
-                col("ptr"), col("pval"))
-            val jumped = hooked.join(
-                hooked.select(col("node").as("ptr"), col("ptr").as("pptr"),
-                  col("pval").as("ppval")),
-                Seq("ptr"), "left")
-              .select(col("node"), col("old"),
-                least(col("color"), col("pval"), col("ppval")).as("color"),
-                coalesce(col("pptr"), col("ptr")).as("ptr"),
-                least(col("pval"), col("ppval")).as("pval"))
-            // checkpointFresh, not plain localCheckpoint: the plan
-            // joins `labels` several times, so PRESERVED stats would
-            // grow digits ×k per round (see checkpointFresh). The
-            // fixpoint check rides the SAME materialization as an
-            // observe metric (round 21, guide §1.2 — one action per
-            // hook+jump round, not two).
-            val jumpedObs = jumped
-              .select(col("node"), col("color"), col("ptr"), col("pval"),
-                (col("color") =!= col("old")).as("_chg"))
-              .observe("mlf", count(when(col("_chg"), 1)).as("n_chg"))
-              .select(col("node"), col("color"), col("ptr"), col("pval"))
-            val nxt = checkpointFresh(jumpedObs)
-            changed = observedCount(jumpedObs, "mlf") > 0L
-            labels = nxt
-            i += 1
-          }
-          require(!changed, s"scc $what did not converge in " +
-            s"$maxInner hook+jump rounds — raise maxInner")
-          labels.select(col("node"), col("color"))
-        }
+        val trivial = Rounds.fresh(trivialPlan)
+        if (Rounds.observed(trivialPlan, "trim") == 0L) (p, true)
+        else (remove(p, trivial.withColumn("scc_id", col("node")), trivial),
+          false)
+      }.state
+      val (_, nodes, es) = trimmed
+      val next = if (nodes.isEmpty) trimmed else {
         // 2) color to fixpoint: color(u) = min reaching node
-        val colors = minLabelFixpoint(remainingN, remainingE, "coloring")
+        val colors = minLabelFixpoint(nodes, es, "coloring")
         // 3) backward min-label inside each color class: backColor(u) =
         // min node reachable FROM u through same-color nodes — so the
         // propagation runs on the REVERSED class-restricted edges
-        val classEdges = remainingE
+        val classEdges = es
           .join(colors.select(col("node").as("src"),
             col("color").as("ucol")), Seq("src"))
           .join(colors.select(col("node").as("dst"),
             col("color").as("vcol")), Seq("dst"))
           .filter(col("ucol") === col("vcol"))
           .select(col("dst").as("src"), col("src").as("dst"))
-        val backColors = minLabelFixpoint(remainingN,
-          checkpointFresh(classEdges), "backward reach")
+        val backColors = minLabelFixpoint(nodes,
+          Rounds.fresh(classEdges), "backward reach")
         val found = colors
           .join(backColors.withColumnRenamed("color", "back"), Seq("node"))
           .filter(col("color") === col("back"))
           .select(col("node"), col("color").as("scc_id"))
           .localCheckpoint()
-        assigned = assigned.unionAll(found).localCheckpoint()
-        remainingN = checkpointFresh(remainingN
-          .join(found.select(col("node")), Seq("node"), "left_anti"))
-        remainingE = checkpointFresh(remainingE
-          .join(remainingN.select(col("node").as("src")), Seq("src"), "left_semi")
-          .join(remainingN.select(col("node").as("dst")), Seq("dst"), "left_semi"))
+        remove(trimmed, found, found.select(col("node")))
       }
-      doneAll = remainingN.isEmpty
-      outer += 1
-    }
-    require(doneAll,
-      s"scc did not converge in $maxOuter outer rounds — raise maxOuter")
-    assigned.select(col("node"), col("scc_id"))
+      (next, next._2.isEmpty)
+    }.orFail("scc", "maxOuter").state._1.select(col("node"), col("scc_id"))
   }
 
   /** X10k — label-propagation community detection (Raghavan et al.
@@ -1240,18 +1138,12 @@ object Graph {
       .unionAll(canon.select(col("a").as("node"), col("b").as("nbr")))
   }
 
-  /** One synchronous LPA round over an arbitrary vote/label pair: the
-    * neighbor votes, the SELF-VOTE as a union of the label frame
-    * itself (round 20 — not materialized (node, node) rows in the
-    * static frame: same vote multiset, one resident copy fewer), then
-    * the sort-free argmax. max_by over the (cnt, −label) struct is the
-    * (cnt DESC, label ASC) total order with no per-node sort, and the
-    * struct is unique per node so the pick is exact. */
-  private def lpaRound(votes: DataFrame, labels: DataFrame): DataFrame =
-    votes
-      .join(labels.select(col("node").as("nbr"), col("label")), Seq("nbr"))
-      .select(col("node"), col("label"))
-      .unionAll(labels)
+  /** The LPA tally over (node, label) vote rows: the per-(node, label)
+    * count, then the sort-free argmax. max_by over the (cnt, −label)
+    * struct is the (cnt DESC, label ASC) total order with no per-node
+    * sort, and the struct is unique per node so the pick is exact. */
+  private def lpaTally(voteRows: DataFrame): DataFrame =
+    voteRows
       .groupBy(col("node"), col("label")).agg(count(lit(1)).as("cnt"))
       .groupBy(col("node"))
       .agg(max_by(col("label"),
@@ -1290,10 +1182,8 @@ object Graph {
     val votes = Fanout.pinned(lpaVotes(edges), "nbr")
     // the frame is symmetric, so the nbr side names every node
     val nodes = votes.select(col("nbr").as("node")).distinct()
-    var labels = nodes.withColumn("label", col("node"))
+    val seed = nodes.withColumn("label", col("node"))
       .localCheckpoint(eager = false)
-    val hist = Seq.newBuilder[DataFrame]
-    hist += labels
     // width guard for the per-round vote join (round 18, BASELINE.md
     // "Width guards"): in the checkpoint branch AQE sized the join from
     // the ~10 MB vote bytes and ran the round's argmax CPU (4.6 s) on 8
@@ -1309,20 +1199,19 @@ object Graph {
     // shortcut labelPropagationIncremental's k == 1 branch uses).
     // Identical vote multiset: the join against the identity frame
     // neither filtered (the symmetric frame's nbr side names every
-    // node) nor relabeled anything.
-    labels = votesWide.select(col("node"), col("nbr").as("label"))
-      .unionAll(labels)
-      .groupBy(col("node"), col("label")).agg(count(lit(1)).as("cnt"))
-      .groupBy(col("node"))
-      .agg(max_by(col("label"),
-        struct(col("cnt"), (-col("label")).as("neg"))).as("label"))
-      .localCheckpoint(eager = false)
-    hist += labels
-    (2 to rounds).foreach { _ =>
-      labels = lpaRound(votesWide, labels).localCheckpoint(eager = false)
-      hist += labels
+    // node) nor relabeled anything. Every round's self-vote is a union
+    // of the label frame itself (round 20 — not materialized (node,
+    // node) rows in the static frame: same vote multiset, one resident
+    // copy fewer).
+    val hist = Rounds.fixed(seed, rounds) { (labels, k) =>
+      lpaTally(
+        (if (k == 1) votesWide.select(col("node"), col("nbr").as("label"))
+        else votesWide
+          .join(labels.select(col("node").as("nbr"), col("label")), Seq("nbr"))
+          .select(col("node"), col("label")))
+          .unionAll(labels))
     }
-    (hist.result(), votes)
+    (hist, votes)
   }
 
   /** X7w — INCREMENTAL LPA MAINTENANCE (round 20): the standing
@@ -1368,9 +1257,6 @@ object Graph {
     * merged final edge set (x7_incr_lpa). */
   def labelPropagationIncremental(hist: Seq[DataFrame], edges1: DataFrame,
       changed: DataFrame, rounds: Int, votes0: DataFrame): DataFrame = {
-    require(hist.length == rounds + 1,
-      s"history must carry rounds 0..$rounds, got ${hist.length} frames")
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // VOTE FRAME (the 1M measurement that shaped this): re-deriving
     // v1's symmetric distinct vote frame is itself a graph-sized
     // shuffle (147.9 MB for a 100-edge change at 1M nodes — the
@@ -1402,19 +1288,14 @@ object Graph {
       .localCheckpoint(eager = false)
     val votes = votes0.join(broadcast(changedSym), Seq("node", "nbr"), "left_anti")
       .unionByName(touched)
-    // endpoints of every changed edge, both roles (the frame is
-    // symmetric, so an edge change dirties both ends)
-    val dirty1 = changedSym.select(col("node")).distinct()
-      .localCheckpoint(eager = false)
-    var dirty = dirty1
-    // v1's round-(k-1) labeling for the recompute; round 1 needs NO
-    // frame at all — round-0 labels are the IDENTITY, so the neighbor
-    // vote is the neighbor id and the self-vote is the node id
-    // (deriving a v1 seed frame would cost a node-set distinct over
-    // the whole vote frame, another graph-sized exchange)
-    var mixPrev: DataFrame = null
-    var newLabels: DataFrame = null
-    (1 to rounds).foreach { k =>
+    // dirty₁: endpoints of every changed edge, both roles (the frame is
+    // symmetric, so an edge change dirties both ends). Round 1 needs NO
+    // mix frame at all — round-0 labels are the IDENTITY, so the
+    // neighbor vote is the neighbor id and the self-vote is the node id
+    // (deriving a v1 seed frame would cost a node-set distinct over the
+    // whole vote frame, another graph-sized exchange)
+    Rounds.maintain(hist, rounds, changedSym.select(col("node")), null) {
+        (dirty, mix, k) =>
       // ONE pass over the vote frame per round: `into` (edges into the
       // dirty set) is frontier-sized and checkpointed, and by SYMMETRY
       // it also answers the next frontier (neighbors of dirty = its
@@ -1423,8 +1304,7 @@ object Graph {
       // this round (measured: the un-checkpointed form re-evaluated
       // the votes plan three times per round — 580 MB of cache reads
       // each — and the maintain wall matched the full recompute)
-      val into = votes.join(broadcast(dirty), Seq("node"), "left_semi")
-        .localCheckpoint(eager = false)
+      val into = Rounds.cut(votes.join(broadcast(dirty), Seq("node"), "left_semi"))
       val voteRows = if (k == 1)
         into.select(col("node"), col("nbr").as("label"))
           // self-vote: once per dirty v1 node (a dirty node with no
@@ -1437,31 +1317,16 @@ object Graph {
         // sort-merge the node-sized mix against it, shuffling the
         // graph-sized side every round), so it rides the frontier
         // broadcast hint like every other dirty-keyed side
-        broadcast(into).join(mixPrev.select(col("node").as("nbr"), col("label")),
+        broadcast(into).join(mix.select(col("node").as("nbr"), col("label")),
             Seq("nbr"))
           .select(col("node"), col("label"))
           // self-vote: every dirty v1 node's own mix row — also what
           // guarantees a dirty node with no surviving edges but still
           // in v1 keeps labeling itself (cannot happen for edge-defined
           // node sets, but the mix row is the honest source either way)
-          .unionAll(mixPrev.join(broadcast(dirty), Seq("node"), "left_semi"))
-      newLabels = voteRows
-        .groupBy(col("node"), col("label")).agg(count(lit(1)).as("cnt"))
-        .groupBy(col("node"))
-        .agg(max_by(col("label"),
-          struct(col("cnt"), (-col("label")).as("neg"))).as("label"))
-        .localCheckpoint(eager = false)
-      if (k < rounds) {
-        val nextDirty = dirty1
-          .unionByName(into.select(col("nbr").as("node")))
-          .distinct().localCheckpoint(eager = false)
-        mixPrev = hist(k).join(broadcast(dirty), Seq("node"), "left_anti")
-          .unionByName(newLabels)
-        dirty = nextDirty
-      }
+          .unionAll(mix.join(broadcast(dirty), Seq("node"), "left_semi"))
+      (lpaTally(voteRows), into.select(col("nbr").as("node")))
     }
-    hist(rounds).join(broadcast(dirty), Seq("node"), "left_anti")
-      .unionByName(newLabels)
   }
 
   /** X10m — single-source(-set) shortest paths with INTEGER edge
@@ -1507,13 +1372,24 @@ object Graph {
       edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"), col("w").cast("long").as("w")),
       "src")
-    var dist = sources.select(col("node").cast("long").as("node"))
+    val seed = sources.select(col("node").cast("long").as("node"))
       .distinct()
       .withColumn("dist", lit(0L))
       .localCheckpoint(eager = false)
-    var frontier = dist
-    (1 to rounds).foreach { _ =>
-      val relaxed = frontier.join(e, frontier("node") === e("src"))
+    // round r's merged frame (node, _pd, _cd) holds both the bounds and
+    // the frontier that improved; round 0's is the seed itself
+    def dist(m: DataFrame, r: Int): DataFrame = if (r == 0) m
+      else m.select(col("node"),
+        when(col("_pd").isNull, col("_cd"))
+          .when(col("_cd").isNull, col("_pd"))
+          .otherwise(least(col("_pd"), col("_cd"))).as("dist"))
+    def frontier(m: DataFrame, r: Int): DataFrame = if (r == 0) m
+      else m.filter(col("_pd").isNull ||
+          (col("_cd").isNotNull && col("_cd") < col("_pd")))
+        .select(col("node"), col("_cd").as("dist"))
+    val merged = Rounds.fixed(seed, rounds) { (m, r) =>
+      val f = frontier(m, r - 1)
+      val relaxed = f.join(e, f("node") === e("src"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
         .groupBy(col("node")).agg(min(col("dist")).as("_cd"))
       // improvement check AND state update in ONE full-outer join: the
@@ -1527,19 +1403,10 @@ object Graph {
       // component expansion, not per-round state churn.) Renamed
       // columns mint fresh attribute ids (round 1's frontier IS dist;
       // dotted self-aliases collide)
-      val merged = dist.select(col("node"), col("dist").as("_pd"))
+      dist(m, r - 1).select(col("node"), col("dist").as("_pd"))
         .join(relaxed, Seq("node"), "full_outer")
-        .localCheckpoint(eager = false)
-      frontier = merged
-        .filter(col("_pd").isNull ||
-          (col("_cd").isNotNull && col("_cd") < col("_pd")))
-        .select(col("node"), col("_cd").as("dist"))
-      dist = merged.select(col("node"),
-        when(col("_pd").isNull, col("_cd"))
-          .when(col("_cd").isNull, col("_pd"))
-          .otherwise(least(col("_pd"), col("_cd"))).as("dist"))
     }
-    dist
+    dist(merged.last, rounds)
   }
 
   /** X10l — Newman modularity of a node labeling: Q = Σ_c [e_c/m −
@@ -1625,19 +1492,11 @@ object Graph {
     // static frame — the |E|-row seed distinct and round 1's rank join
     // drop out of the plan. Identical arithmetic, round for round.
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    var rank = e
-      .select(col("dst"), expr("(1000000 * w) div wsum").as("contrib"))
-      .groupBy(col("dst"))
-      .agg(sum(col("contrib")).as("c"))
-      .select(col("dst").as("src"),
-        (lit(150000L) + expr("(850 * c) div 1000")).as("score"))
+    var rank = damped(
+      e.select(col("dst"), expr("(1000000 * w) div wsum").as("contrib")), "src")
     (2 to iters).foreach { _ =>
-      rank = e.join(rank, Seq("src"))
-        .select(col("dst"), expr("(score * w) div wsum").as("contrib"))
-        .groupBy(col("dst"))
-        .agg(sum(col("contrib")).as("c"))
-        .select(col("dst").as("src"),
-          (lit(150000L) + expr("(850 * c) div 1000")).as("score"))
+      rank = damped(e.join(rank, Seq("src"))
+        .select(col("dst"), expr("(score * w) div wsum").as("contrib")), "src")
     }
     rank.select(col("src").as("node"), col("score"))
   }

@@ -548,15 +548,7 @@ object Similarity {
           Seq("sub"))
         .withColumn("_best", expr("graft_argmin_l2(sv, _codes, -1)"))
         .withColumn("code", col("_best.i").cast("int"))
-      val means = assigned
-        .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("d", "x")))
-        .groupBy(col("sub"), col("code"), col("d")).agg(avg(col("x")).as("mn"))
-        .groupBy(col("sub"), col("code"))
-        .agg(expr("transform(array_sort(collect_list(struct(d, mn))), s -> s.mn)")
-          .as("mv"))
-      cb = cb.join(means, Seq("sub", "code"), "left")
-        .select(col("sub"), col("code"), coalesce(col("mv"), col("cv")).as("cv"))
-        .localCheckpoint()
+      cb = Clustering.recenter(cb, assigned, Seq("sub", "code"), "sv")
     }
     cb
   }

@@ -322,12 +322,21 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(spanPairs == Set((9001L, 9002L)))
   }
 
-  test("X2e components fails loudly when maxIter is below the graph diameter") {
+  test("X2e/X2e'/X10s round-bounded resolvers fail loudly, naming themselves") {
     val nodes = (1L to 5L).toDF("doc_id")
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("d1", "d2")
+    val ring = (1L to 8L).map(i => (i, i % 8 + 1)).toDF("src", "dst")
     // silent under-merge would return wrong clusters with no signal
-    intercept[IllegalArgumentException] {
-      Dedup.components(nodes, chain, "doc_id", maxIter = 1).collect()
+    val cases = Seq[(String, () => Unit)](
+      "components" ->
+        (() => Dedup.components(nodes, chain, "doc_id", maxIter = 1).collect()),
+      "componentsStar" ->
+        (() => Dedup.componentsStar(nodes, chain, "doc_id", maxIter = 1).collect()),
+      "scc coloring" -> (() => Graph.scc(ring, maxInner = 1).collect()))
+    cases.foreach { case (what, run) =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains(s"$what did not converge in 1 rounds"),
+        e.getMessage)
     }
   }
 

@@ -8,6 +8,8 @@ plan metrics + optional run stamp) and emits, per shared lane:
   - wall ratio new/old
   - shuffle/rows/bytes metric ratios (when both sides carry "metrics")
   - plan_ms/glue_ms ratios (when both sides carry the lane's wall split)
+  - the lane's Spark job and SQL execution counts, old -> new (when both
+    sides carry them), so a change in how many jobs a lane runs shows up
   - a verdict: FASTER / SLOWER / NOISE / PLAN-CHANGE
 The point (r20's lesson): a wall-only drift with unchanged plan metrics is
 host load, not a code regression — classify it mechanically from artifacts
@@ -51,7 +53,8 @@ def main():
     print(f"# shared lanes: {len(shared)}  total {tot_o:.2f}s -> "
           f"{tot_n:.2f}s  ratio {tot_n / tot_o:.3f}" if tot_o else "")
     hdr = f"{'lane':28s} {'old_s':>7s} {'new_s':>7s} {'wall':>6s} " \
-          f"{'shuf':>6s} {'rows':>6s} {'plan':>6s} {'glue':>6s} verdict"
+          f"{'shuf':>6s} {'rows':>6s} {'plan':>6s} {'glue':>6s} " \
+          f"{'jobs':>9s} {'sql_execs':>9s} verdict"
     print(hdr)
     for k in shared:
         o, n = oq[k], nq[k]
@@ -67,6 +70,11 @@ def main():
                 return None
             return b / a if a else None
 
+        def counts(field):
+            a = om.get(k, {}).get(field)
+            b = nm.get(k, {}).get(field)
+            return "-" if a is None or b is None else f"{a}->{b}"
+
         shuf, rows = mratio("shuffle_bytes"), mratio("rows_read")
         plan, glue = mratio("plan_ms"), mratio("glue_ms")
         plan_moved = any(r is not None and abs(r - 1.0) > 0.05
@@ -81,7 +89,8 @@ def main():
             verdict = "NOISE"
         fmt = lambda r: f"{r:6.2f}" if r is not None else "     -"
         print(f"{k:28s} {o:7.3f} {n:7.3f} {wall:6.2f} "
-              f"{fmt(shuf)} {fmt(rows)} {fmt(plan)} {fmt(glue)} {verdict}")
+              f"{fmt(shuf)} {fmt(rows)} {fmt(plan)} {fmt(glue)} "
+              f"{counts('jobs'):>9s} {counts('sql_execs'):>9s} {verdict}")
     only_old = sorted(set(oq) - set(nq))
     only_new = sorted(set(nq) - set(oq))
     if only_old:
