@@ -49,21 +49,10 @@ case class MedianMad(child: Expression) extends UnaryExpression {
 
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    if (n == 0) null
+    if (arr.numElements() == 0) null
     else {
-      val buf = arr.toLongArray()
-      java.util.Arrays.sort(buf)
-      val mid = (n + 1) / 2
-      val med = buf(mid - 1)
-      var i = 0
-      while (i < n) {
-        val d = buf(i) - med
-        buf(i) = if (d < 0) -d else d
-        i += 1
-      }
-      java.util.Arrays.sort(buf)
-      UnsafeArrayData.fromPrimitiveArray(Array(med, buf(mid - 1)))
+      val (med, mad) = MedianMad.lowerMedianMad(arr.toLongArray())
+      UnsafeArrayData.fromPrimitiveArray(Array(med, mad))
     }
   }
 
@@ -97,4 +86,25 @@ case class MedianMad(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): MedianMad =
     copy(child = newChild)
+}
+
+object MedianMad {
+  /** Lower median and lower MAD of a non-empty window — the math of the
+    * expression's interpreted path (the codegen string spells out the
+    * same steps) and of its streaming twin's ring
+    * (`streaming.TickPipeline.streamingAnomalies`). Sorts and overwrites
+    * `buf`. */
+  def lowerMedianMad(buf: Array[Long]): (Long, Long) = {
+    java.util.Arrays.sort(buf)
+    val mid = (buf.length + 1) / 2
+    val med = buf(mid - 1)
+    var i = 0
+    while (i < buf.length) {
+      val d = buf(i) - med
+      buf(i) = if (d < 0) -d else d
+      i += 1
+    }
+    java.util.Arrays.sort(buf)
+    (med, buf(mid - 1))
+  }
 }

@@ -258,19 +258,8 @@ object Sketch {
     * bounds the shuffle at m rows per partition, and per-shard register
     * tables merge by elementwise MAX (spec-pinned). */
   def hllRegisters(df: DataFrame, valueCol: String): DataFrame = {
-    val h = md5(col(valueCol).cast("string"))
-    val bucket = shiftright(
-      conv(substring(h, 1, 2), 16, 10).cast("long"), 2).cast("int")
-    val tail = substring(h, 3, 13) // 52 bits
-    val nz = ltrim(tail, "0")
-    val nibLead =
-      when(substring(nz, 1, 1).isin("8", "9", "a", "b", "c", "d", "e", "f"), 0)
-        .when(substring(nz, 1, 1).isin("4", "5", "6", "7"), 1)
-        .when(substring(nz, 1, 1).isin("2", "3"), 2)
-        .otherwise(3)
-    val zeros = when(nz === "", lit(52))
-      .otherwise(lit(4) * (lit(13) - length(nz)) + nibLead)
-    val observed = df.select(bucket.as("bucket"), (zeros + 1).as("rho"))
+    val (bucket, rho) = hllBucketRho(valueCol)
+    val observed = df.select(bucket.as("bucket"), rho.as("rho"))
       .groupBy(col("bucket")).agg(max(col("rho")).cast("int").as("reg"))
     // empty registers count as 0 in Z: join the full spine
     df.sparkSession.range(64).select(col("id").cast("int").as("bucket"))
@@ -286,20 +275,9 @@ object Sketch {
     * group so empty registers read 0 for the estimate. */
   def hllRegistersBy(df: DataFrame, valueCol: String,
       groupCols: Seq[String]): DataFrame = {
-    val h = md5(col(valueCol).cast("string"))
-    val bucket = shiftright(
-      conv(substring(h, 1, 2), 16, 10).cast("long"), 2).cast("int")
-    val tail = substring(h, 3, 13)
-    val nz = ltrim(tail, "0")
-    val nibLead =
-      when(substring(nz, 1, 1).isin("8", "9", "a", "b", "c", "d", "e", "f"), 0)
-        .when(substring(nz, 1, 1).isin("4", "5", "6", "7"), 1)
-        .when(substring(nz, 1, 1).isin("2", "3"), 2)
-        .otherwise(3)
-    val zeros = when(nz === "", lit(52))
-      .otherwise(lit(4) * (lit(13) - length(nz)) + nibLead)
+    val (bucket, rho) = hllBucketRho(valueCol)
     val g = groupCols.map(col)
-    val observed = df.select(g :+ bucket.as("bucket") :+ (zeros + 1).as("rho"): _*)
+    val observed = df.select(g :+ bucket.as("bucket") :+ rho.as("rho"): _*)
       .groupBy(g :+ col("bucket"): _*)
       .agg(max(col("rho")).cast("int").as("reg"))
     val spine = df.select(g: _*).distinct()
@@ -309,14 +287,31 @@ object Sketch {
       .select(g :+ col("bucket") :+ coalesce(col("reg"), lit(0)).as("reg"): _*)
   }
 
+  /** A value's HLL register index and rank, md5-derived with
+    * string/nibble ops only (see [[hllRegisters]]): bucket = top 6 bits
+    * of the digest, rho = 1 + leading-zero count of the next 52 bits. */
+  private def hllBucketRho(valueCol: String): (Column, Column) = {
+    val h = md5(col(valueCol).cast("string"))
+    val bucket = shiftright(
+      conv(substring(h, 1, 2), 16, 10).cast("long"), 2).cast("int")
+    val tail = substring(h, 3, 13) // 52 bits
+    val nz = ltrim(tail, "0")
+    val nibLead =
+      when(substring(nz, 1, 1).isin("8", "9", "a", "b", "c", "d", "e", "f"), 0)
+        .when(substring(nz, 1, 1).isin("4", "5", "6", "7"), 1)
+        .when(substring(nz, 1, 1).isin("2", "3"), 2)
+        .otherwise(3)
+    val zeros = when(nz === "", lit(52))
+      .otherwise(lit(4) * (lit(13) - length(nz)) + nibLead)
+    (bucket, zeros + 1)
+  }
+
   /** Per-group (uncorrected) HLL estimate from [[hllRegistersBy]] output:
     * one row per group, 1e4 fixed-point. Same exact-dyadic-Z portability
     * argument as [[hllEstimate]]. */
   def hllEstimateBy(registers: DataFrame, groupCols: Seq[String]): DataFrame =
     registers.groupBy(groupCols.map(col): _*)
-      .agg(floor(lit(0.7213) / (lit(1.0) + lit(1.079) / lit(64)) * lit(4096)
-        / sum(pow(lit(2.0), -col("reg"))) * lit(1e4) + lit(0.5))
-        .cast("long").as("est_fp"))
+      .agg(hllEstExpr(sum(pow(lit(2.0), -col("reg")))).as("est_fp"))
 
   /** Merge per-shard register tables (same m): elementwise max. */
   def hllMerge(regs: DataFrame*): DataFrame = {
@@ -332,11 +327,15 @@ object Sketch {
     val w = org.apache.spark.sql.expressions.Window
       .rowsBetween(Long.MinValue, Long.MaxValue)
     registers.withColumn("_z", sum(pow(lit(2.0), -col("reg"))).over(w))
-      .withColumn("est_fp",
-        floor(lit(0.7213) / (lit(1.0) + lit(1.079) / lit(64)) * lit(4096)
-          / col("_z") * lit(1e4) + lit(0.5)).cast("long"))
+      .withColumn("est_fp", hllEstExpr(col("_z")))
       .drop("_z")
   }
+
+  /** The (uncorrected) HLL estimate alpha_m * m^2 / z for m = 64 from
+    * z = sum(2^-reg), as a 1e4 fixed-point long. */
+  private def hllEstExpr(z: Column): Column =
+    floor(lit(0.7213) / (lit(1.0) + lit(1.079) / lit(64)) * lit(4096)
+      / z * lit(1e4) + lit(0.5)).cast("long")
 
   /** Weighted sampling WITHOUT replacement, k rows, P(i beats j) =
     * w_i / (w_i + w_j) — the exponential race (Efraimidis–Spirakis),

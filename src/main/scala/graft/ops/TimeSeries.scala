@@ -514,14 +514,25 @@ object TimeSeries {
         if (!haveKey || k != curKey) {
           curKey = k; haveKey = true; prev = cents; up = 0L; dn = 0L
         }
-        val d = cents - prev
-        prev = cents
-        up = math.max(0L, up + d - slack)
-        dn = math.max(0L, dn - d - slack)
-        (tie, k, cents, d, up, dn,
-          if (up > threshold || dn > threshold) 1L else 0L)
+        val row = cusumStep(k, tie, cents, prev, up, dn, slack, threshold)
+        prev = cents; up = row._5; dn = row._6
+        row
       }
     }.toDF(tieCol, keyCol, "cents", "d", "cusum_up", "cusum_dn", "alarm")
+  }
+
+  /** The CUSUM recursion, once for [[cusum]] and its streaming twin
+    * (`streaming.TickPipeline.streamingCusum`): from a key's carried
+    * (prev, up, dn) (a key's first tick carries prev = its own cents and
+    * up = dn = 0), the tick's row (tie, key, cents, d, up, dn, alarm).
+    * The next tick carries (cents, up, dn) of that row. */
+  def cusumStep(key: Long, tie: Long, cents: Long, prev: Long, up: Long,
+      dn: Long, slack: Long, threshold: Long)
+      : (Long, Long, Long, Long, Long, Long, Long) = {
+    val d = cents - prev
+    val u = math.max(0L, up + d - slack)
+    val v = math.max(0L, dn - d - slack)
+    (tie, key, cents, d, u, v, if (u > threshold || v > threshold) 1L else 0L)
   }
 
   /** X8 — seasonal slot profile: per (key, time-slot) activity shape —

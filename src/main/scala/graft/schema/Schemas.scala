@@ -87,6 +87,19 @@ object Transition {
     DOWNLOADED -> Set(IMPORTED, ERROR, NEW),
     IMPORTED -> Set.empty,
     ERROR -> Set.empty)
+  /** A job's transitions apply in timestamp order, by the FULL timestamp:
+    * two transitions under a millisecond apart keep their event order. */
+  val byTime: Ordering[(Long, Int, java.sql.Timestamp)] =
+    Ordering.by(t => (t._3.getTime, t._3.getNanos))
+  /** One step of the job state machine, as the streaming operators fold
+    * it in [[byTime]] order: from `current` (-1 = no state yet, so any
+    * first action is accepted) a legal action moves the job and emits
+    * (job, from, to); an illegal one is dropped and the state kept. */
+  def step(current: Int, t: (Long, Int, java.sql.Timestamp))
+      : (Int, Option[(Long, Int, Int)]) =
+    if (current == -1 || legal.getOrElse(current, Set.empty).contains(t._2))
+      (t._2, Some((t._1, current, t._2)))
+    else (current, None)
   val schema: StructType = StructType(Seq(
     StructField("job_id", LongType, nullable = false),
     StructField("action", IntegerType, nullable = false),

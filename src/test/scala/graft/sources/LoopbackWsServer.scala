@@ -21,9 +21,10 @@ import java.util.concurrent.atomic.AtomicInteger
   *   3. pushes `script(c)` as text frames (caller encodes ticker arrays /
   *      heartbeats with the connection's chanId via the `%CID%`
   *      placeholder);
-  *   4. if `dropAfter(c)`, kills the TCP socket abruptly (no close
-  *      frame) — the mid-stream failure the client must reconnect from;
-  *      otherwise leaves the socket open until `close()`.
+  *   4. if `dropAfter(c)`, sends a ping, waits (bounded) for the
+  *      client's automatic pong, then kills the TCP socket abruptly (no
+  *      close frame) — the mid-stream failure the client must reconnect
+  *      from; otherwise leaves the socket open until `close()`.
   *
   * Single-threaded accept loop; one connection serviced at a time (the
   * client under test holds exactly one socket). */
@@ -104,8 +105,19 @@ final class LoopbackWsServer(
     }
     if (open) {
       script(c).foreach(m => sendText(out, m.replace("%CID%", cid.toString)))
-      if (dropAfter(c)) () // abrupt close in the caller's finally
-      else {
+      if (dropAfter(c)) {
+        // the JDK client answers a ping only after every earlier text
+        // frame has reached onText, so once its pong is back the drop
+        // (the caller's finally) cannot lose the script's last frame
+        sendPing(out)
+        sock.setSoTimeout(5000) // a timeout ends the wait, then drops
+        var acked = false
+        while (!acked) readFrame(in) match {
+          case Some((0xA, _)) | Some((0x8, _)) | None => acked = true
+          case Some((0x9, p)) => if (!silentPings) sendPong(out, p)
+          case _ => ()
+        }
+      } else {
         // hold the socket until the client closes or the server shuts down
         sock.setSoTimeout(250)
         var held = true
@@ -176,6 +188,13 @@ final class LoopbackWsServer(
     out.write(0x8a)
     out.write(payload.length) // client pings here are tiny (< 126)
     out.write(payload)
+    out.flush()
+  }
+
+  /** Empty ping, unmasked; the client's pong ends the drop's wait. */
+  private def sendPing(out: OutputStream): Unit = {
+    out.write(0x89)
+    out.write(0)
     out.flush()
   }
 

@@ -133,6 +133,24 @@ class StreamingSpec extends SparkSpec {
     assert(rows == Seq((1L, -1, 1000), (1L, 1000, 1001), (2L, -1, 1300)))
   }
 
+  test("ST5b transitions under a millisecond apart apply in timestamp " +
+      "order, not arrival order") {
+    def at(micros: Int) = {
+      val t = ts(0); t.setNanos(micros * 1000); t
+    }
+    val in = MemoryStream[(Long, Int, Timestamp)](spark)
+    val q = TickPipeline.jobTransitionLog(in.toDS())
+      .toDF("job_id", "from", "to")
+      .writeStream.outputMode("append").format("memory").queryName("jlog_us")
+      .start()
+    // one batch, arriving out of order within the same millisecond
+    in.addData((1L, 1001, at(600)), (1L, 1000, at(100)))
+    q.processAllAvailable()
+    q.stop()
+    val rows = spark.table("jlog_us").as[(Long, Int, Int)].collect().toSeq
+    assert(rows == Seq((1L, -1, 1000), (1L, 1000, 1001)))
+  }
+
   test("ST5c runningTotals carries (seq, cents) state across micro-batches") {
     val in = MemoryStream[(Long, Long, Long, Long)](spark)
     val q = TickPipeline.runningTotals(in.toDS())

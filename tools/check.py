@@ -7,6 +7,10 @@ Usage: python3 tools/check.py [sf_dir] [out_dir] [--skip-verify]
 2. loads each <out_dir>/<name> parquet result
 3. runs the matching oracle_sql.json SQL in DuckDB over the same tables
 4. compares row count, column names, dtypes, and values (exact)
+
+Exits 1 when any lane FAILs (or none was compared), and 2 when an
+--only=a,b name is neither in oracle_sql.json nor a produced (rows-only)
+output.
 """
 import sys, os, glob, subprocess, json, re
 import duckdb
@@ -102,6 +106,11 @@ def main():
     produced = {os.path.basename(p) for p in glob.glob(f"{out_dir}/*")
                 if os.path.isdir(p)}
     if only:
+        unknown = sorted(only - set(oracle) - produced)
+        if unknown:
+            print(f"UNKNOWN --only lane(s): {', '.join(unknown)} "
+                  "(not in oracle_sql.json, no Spark output)")
+            sys.exit(2)
         oracle = {k: v for k, v in oracle.items() if k in only}
         produced = {p for p in produced if p in only}
     for name in sorted(oracle):
@@ -167,6 +176,7 @@ def main():
             npass += 1
         print(f"{flag:4} {name}: {r}")
     print(f"== {npass}/{len(results)} pass ==")
+    sys.exit(0 if results and npass == len(results) else 1)
 
 if __name__ == "__main__":
     main()
